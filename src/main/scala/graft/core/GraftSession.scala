@@ -1,6 +1,13 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory with the scale-oriented defaults this engine assumes.
   *
@@ -83,5 +90,66 @@ object GraftSession {
 
   /** Read one of the star-schema tables from a scale-factor directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without re-inferring a schema it has
+    * already seen. Spark infers a parquet schema with a Spark job on
+    * every read, even of one unchanged file; a scalding `Source` carries
+    * its scheme (reference `Source.scala:81-194`), so building a flow
+    * never reads data. The memo keeps, per path, the inferred schema and
+    * a stamp of what inference saw: every data file of the relation as
+    * (path, length, modification time), from the listing Spark makes
+    * for the read anyway, and the session confs that change what
+    * inference returns. A read whose stamp matches reuses the schema
+    * and starts no job; any other read infers and replaces the entry.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = inferenceConfs(spark)
+    // a changed directory can fail to plan under the old schema (a new
+    // partition value its partition type cannot hold), and Spark moves
+    // a partition column that is also a data column to the end under a
+    // given schema: either way, infer
+    val memo = Option(parquetSchemas.get(path)).flatMap { case (schema, stamp) =>
+      Try(spark.read.schema(schema).parquet(path)).toOption
+        .filter(df => df.schema == schema && listingStamp(df, confs).contains(stamp))
+    }
+    memo.getOrElse {
+      val df = spark.read.parquet(path)
+      listingStamp(df, confs).foreach(st => parquetSchemas.put(path, (df.schema, st)))
+      df
+    }
+  }
+
+  /** Explicitly set confs that parquet schema or partition inference
+    * reads (binaryAsString, nanosAsLong, mergeSchema, partition type
+    * inference, case sensitivity, ...).
+    */
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k == "spark.sql.caseSensitive" ||
+        Seq("spark.sql.parquet.", "spark.sql.legacy.", "spark.sql.sources.")
+          .exists(k.startsWith)
+    }.sorted
+
+  /** SHA-256 over the relation's data files and `confs`, or None when
+    * the plan is not a file relation with a listing.
+    */
+  private def listingStamp(df: DataFrame, confs: Seq[(String, String)]): Option[String] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        val md = MessageDigest.getInstance("SHA-256")
+        def put(s: Any): Unit = md.update(s"$s\u0000".getBytes(UTF_8))
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sorted.foreach { case (p, len, mtime) => put(p); put(len); put(mtime) }
+        confs.foreach { case (k, v) => put(k); put(v) }
+        java.util.HexFormat.of().formatHex(md.digest())
+      }
+
+  /** path -> (schema, stamp), least recently used evicted past 256 paths. */
+  private val parquetSchemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (StructType, String)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (StructType, String)]): Boolean = size() > 256
+    })
 }

@@ -2328,27 +2328,26 @@ object Events {
         i += 1
       }
       // lower median: the ⌈m/2⌉-th smallest, 1-indexed — quickselect
-      var target = ((m + 1) / 2 - 1).toInt
+      // with a three-way partition, so a run of equal slopes (a flat
+      // series is all 0.0) settles in one pass instead of one element
+      // per pass
+      val target = ((m + 1) / 2 - 1).toInt
       var lo = 0; var hi = slopes.length - 1
       var seed = 0x9E3779B97F4A7C15L // deterministic pivots
       while (lo < hi) {
         seed = seed * 6364136223846793005L + 1442695040888963407L
-        val p = lo + (((seed >>> 33) % (hi - lo + 1)).toInt)
-        val pv = slopes(p)
-        slopes(p) = slopes(hi); slopes(hi) = pv
-        var store = lo
-        var q = lo
-        while (q < hi) {
-          if (slopes(q) < pv) {
-            val t0 = slopes(store); slopes(store) = slopes(q)
-            slopes(q) = t0; store += 1
-          }
-          q += 1
+        val pv = slopes(lo + (((seed >>> 33) % (hi - lo + 1)).toInt))
+        // [lo, lt) < pv, [lt, q) == pv, (gt, hi] > pv
+        var lt = lo; var gt = hi; var q = lo
+        while (q <= gt) {
+          val v = slopes(q)
+          if (v < pv) { slopes(q) = slopes(lt); slopes(lt) = v; lt += 1; q += 1 }
+          else if (v > pv) { slopes(q) = slopes(gt); slopes(gt) = v; gt -= 1 }
+          else q += 1
         }
-        slopes(hi) = slopes(store); slopes(store) = pv
-        if (store == target) { lo = target; hi = target }
-        else if (store < target) lo = store + 1
-        else hi = store - 1
+        if (target < lt) hi = lt - 1
+        else if (target > gt) lo = gt + 1
+        else { lo = target; hi = target }
       }
       MkStats(Some(s), m, tieTerm, n.toLong, Some(slopes(target)))
     }

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.ml.{Dedup, Profile, TextAnalysis}
 
 /** End-to-end training-corpus preparation — the pipeline this engine's
@@ -32,7 +32,7 @@ class CorpusPrepJob(args: Args) extends GraftJob(args) {
 
   def run(spark: SparkSession): Unit = {
     val out = CorpusPrepJob.prepare(
-      spark.read.parquet(args("input")),
+      GraftSession.readParquet(spark, args("input")),
       lang = args.getOrElse("lang", "en"),
       minQuality = args.getOrElse("min-quality", "0.5").toDouble,
       jaccard = args.getOrElse("jaccard", "0.8").toDouble,

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.ml.{Pca, Pq, Similarity}
 
 /** The embedding-side assembly line — the vector analogue of
@@ -41,7 +41,7 @@ class EmbeddingIndexJob(args: Args) extends GraftJob(args) {
   def run(spark: SparkSession): Unit = {
     val out = args("output")
     val r = EmbeddingIndexJob.build(
-      spark.read.parquet(args("input"))
+      GraftSession.readParquet(spark, args("input"))
         .select(col("vec_id").as("id"), col("embedding").as("vec")),
       dupCos = args.getOrElse("dup-cos", "0.995").toDouble,
       minProto = args.getOrElse("min-proto", "0.0").toDouble,
@@ -103,14 +103,16 @@ object EmbeddingIndexJob {
       .select(col("keep").as("id"))
     val afterExactRaw = raw.join(exact, Seq("id"), "left_semi")
 
+    // one vector off the cached scan gives the width: reading it off
+    // a deduped side would run the whole exact-dedup plan for it
+    val rawDim = raw.select("vec").as[Array[Float]].head().length
+
     // 1b. optional PCA reduce/whiten of the survivors: centroid
     // training, LSH banding and PQ all get cheaper and
     // better-conditioned on decorrelated k-dim vectors; queries
     // replay the projection via the persisted model.
-    val pcaModel: Option[Pca.Model] = if (pcaK > 0) {
-      val dim = raw.select("vec").as[Array[Float]].head().length
-      Some(Pca.fit(afterExactRaw, "vec", dim, pcaK))
-    } else None
+    val pcaModel: Option[Pca.Model] =
+      if (pcaK > 0) Some(Pca.fit(afterExactRaw, "vec", rawDim, pcaK)) else None
     val afterExact = pcaModel match {
       case None => afterExactRaw
       case Some(mdl) =>
@@ -124,7 +126,7 @@ object EmbeddingIndexJob {
     // 2. near-dedup: LSH-bucketed pairs ≥ dupCos; every id that loses
     // any pair (appears as the higher id) drops — greedy, determinist
     val losers = Similarity.cosineNearDuplicates(afterExact, dupCos,
-        dim = afterExact.select("vec").as[Array[Float]].head().length)
+        dim = if (pcaK > 0) pcaK else rawDim)
       .select(col("id2").as("id")).distinct()
     val deduped = graft.core.PipelineCaches.persistTrackedDs(
       afterExact.join(losers, Seq("id"), "left_anti")

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Args, GraftJob, Ts}
+import graft.core.{Args, GraftJob, GraftSession, Ts}
 import graft.events.Events
 import graft.ml.Eval
 
@@ -58,7 +58,7 @@ class ExperimentAnalysisJob(args: Args) extends GraftJob(args) {
   def run(spark: SparkSession): Unit = {
     val out = args("output")
     val r = ExperimentAnalysisJob.analyze(
-      spark.read.parquet(args("input")),
+      GraftSession.readParquet(spark, args("input")),
       variantCol = args.getOrElse("variant-col", ""),
       arms = args.getOrElse("arms", "2").toInt,
       convType = args.getOrElse("conv", "purchase"),

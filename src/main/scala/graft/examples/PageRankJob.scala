@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.matrix.Matrix
 
 /** PageRank as a driver-loop job — parity with the reference's
@@ -22,7 +22,7 @@ class PageRankJob(args: Args) extends GraftJob(args) {
     val maxIters = args.getOrElse("maxiters", "20").toInt
     val eps = args.getOrElse("convergence", "0.001").toDouble
 
-    val edges = spark.read.parquet(args("edges"))
+    val edges = GraftSession.readParquet(spark, args("edges"))
     val weighted =
       if (edges.columns.length > 2) edges
       else edges.withColumn("__w", lit(1.0))

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.ml.{Corpus, Dedup}
 
 /** The full training-data assembly line, [[CorpusPrepJob]] carried
@@ -53,7 +53,7 @@ class TrainingDataJob(args: Args) extends GraftJob(args) {
         k -> v.toDouble
       }.toMap
     val r = TrainingDataJob.assemble(
-      spark.read.parquet(args("input")),
+      GraftSession.readParquet(spark, args("input")),
       lang = args.getOrElse("lang", "en"),
       minQuality = args.getOrElse("min-quality", "0.5").toDouble,
       jaccard = args.getOrElse("jaccard", "0.8").toDouble,

@@ -3,7 +3,7 @@ package graft.examples
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.ml.{Corpus, TextAnalysis, Web}
 
 /** End-to-end RAW-CRAWL preparation — the stage BEFORE
@@ -35,7 +35,7 @@ import graft.ml.{Corpus, TextAnalysis, Web}
 class WebCrawlPrepJob(args: Args) extends GraftJob(args) {
   def run(spark: SparkSession): Unit = {
     WebCrawlPrepJob.prepare(
-      spark.read.parquet(args("input")),
+      GraftSession.readParquet(spark, args("input")),
       minTextRatio = args.getOrElse("min-text-ratio", "0.05").toDouble,
       cap = args.getOrElse("cap", "1000").toInt)
       .write.mode("overwrite").parquet(args("output"))

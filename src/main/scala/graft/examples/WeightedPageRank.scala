@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob}
+import graft.core.{Args, GraftJob, GraftSession}
 import graft.matrix.{ColVector, Matrix}
 
 /** Weighted PageRank — port of the reference's adjacency-list job
@@ -95,7 +95,7 @@ class WeightedPageRankJob(args: Args) extends GraftJob(args) {
     val threshold = args.getOrElse("threshold", "0.001").toDouble
     val maxIters = args.getOrElse("maxiterations", "20").toInt
 
-    val nodes = spark.read.parquet(args("nodes")).localCheckpoint()
+    val nodes = GraftSession.readParquet(spark, args("nodes")).localCheckpoint()
     val n = nodes.count()
     // `checkpointed` tracks the frame actually holding blocks so each
     // superseded iteration is released — unpersisting a derived select

@@ -159,14 +159,17 @@ object Dedup {
     * threshold or band change ships — LSH recall is corpus-dependent
     * (it depends on where the Jaccard mass sits relative to the
     * S-curve), so it must be measured, not assumed. Returns ONE row
-    * (n_truth, n_found, recall, recall_ok).
+    * (n_truth, n_found, recall, recall_ok). `nHashes`, `bands`,
+    * `shingleWidth` and `seed` are the configuration under audit and
+    * default to [[minHashNearDuplicates]]' own.
     *
     * Scale shape: both inputs are the existing bounded pipelines;
     * the audit adds one pair-keyed join + a 1-row aggregate.
     */
   def lshQualityReport(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, blockCols: Seq[String],
-      minRecall: Double = 0.9): DataFrame = {
+      minRecall: Double = 0.9, nHashes: Int = 128, bands: Int = 32,
+      shingleWidth: Int = 2, seed: Long = 42L): DataFrame = {
     // ONE text-kernel pass feeds BOTH pipelines (r12): the old form
     // ran MinHashUtil.shingleHashes over the whole corpus twice —
     // once into prefixFilterJaccardPairs' shingle-set cache, once
@@ -179,10 +182,7 @@ object Dedup {
     // (empty shingle sets give NULL jaccard, filtered by >= t).
     val spark = df.sparkSession
     import spark.implicits._
-    val nHashes = 128
-    val bands = 32
-    val shingleWidth = 2
-    val coeffs = MinHashUtil.coefficients(nHashes, 42L)
+    val coeffs = MinHashUtil.coefficients(nHashes, seed)
     val rowsPer = nHashes / bands
     val blkExpr =
       if (blockCols.isEmpty) lit("")

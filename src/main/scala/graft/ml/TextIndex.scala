@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Persisted inverted index + BM25 retrieval — the lexical twin of
   * the vector index ([[Pq]]/EmbeddingIndexJob): build once into a
@@ -78,7 +79,7 @@ object TextIndex {
     val deltaStats = base.agg(
       count(lit(1)).cast("long").as("n_docs"),
       sum(col("dl")).cast("long").as("sum_dl")).head()
-    val old = spark.read.parquet(s"$dir/stats").head()
+    val old = GraftSession.readParquet(spark, s"$dir/stats").head()
     import spark.implicits._
     val merged = Seq((old.getLong(0) + deltaStats.getLong(0),
       old.getLong(1) + deltaStats.getLong(1)))
@@ -108,10 +109,10 @@ object TextIndex {
     val buckets = terms.toDF("tk")
       .select(bucketOf(col("tk"), nBuckets).as("bucket"))
       .distinct().as[Long].collect().toSeq
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = GraftSession.readParquet(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tk").isin(terms: _*))
-    val stats = spark.read.parquet(s"$dir/stats")
+    val stats = GraftSession.readParquet(spark, s"$dir/stats")
     val dfreq = postings.groupBy("tk").agg(count(lit(1)).cast("long").as("df"))
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
     postings.join(broadcast(dfreq), "tk")

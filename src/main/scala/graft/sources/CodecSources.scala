@@ -6,6 +6,8 @@ import org.apache.spark.util.LongAccumulator
 
 import scala.util.Try
 
+import graft.core.GraftSession
+
 /** Codec-backed byte-record sources — the rebuild of the reference's
   * `LzoCodec[T]`/`CodecSource[T]` family (commons/source/
   * LzoTraits.scala:33-56, CodecSource.scala:33-69): records are
@@ -32,7 +34,7 @@ object CodecSource {
   def read[T: Encoder](spark: SparkSession, path: String,
       decode: Array[Byte] => T): Dataset[T] = {
     import spark.implicits._
-    spark.read.parquet(path).select(col(bytesCol)).as[Array[Byte]].map(decode)
+    GraftSession.readParquet(spark, path).select(col(bytesCol)).as[Array[Byte]].map(decode)
   }
 
   /** Tolerate up to `maxErrors` decode failures, counted with an
@@ -44,7 +46,7 @@ object CodecSource {
       decode: Array[Byte] => T): (Dataset[T], ErrorThresholdCheck) = {
     import spark.implicits._
     val errors = spark.sparkContext.longAccumulator("codec-decode-errors")
-    val ds = spark.read.parquet(path).select(col(bytesCol)).as[Array[Byte]]
+    val ds = GraftSession.readParquet(spark, path).select(col(bytesCol)).as[Array[Byte]]
       .flatMap { bytes =>
         Try(decode(bytes)).toOption match {
           case some @ Some(_) => some

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftSession
 
 /** Small-files compaction — the maintenance pass every daily-append
   * table needs at scale. Incremental writers (streaming foreachBatch,
@@ -54,7 +55,7 @@ object Compaction {
   def compact(spark: SparkSession, inPath: String, outPath: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     val n = plannedFiles(spark, inPath, targetBytes)
-    spark.read.parquet(inPath).repartition(n)
+    GraftSession.readParquet(spark, inPath).repartition(n)
       .write.mode("overwrite").parquet(outPath)
     n
   }

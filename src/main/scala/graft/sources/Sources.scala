@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.GraftSession
 import graft.dates.{DateRange, Duration, TimePathUtil}
 
 import java.time.ZoneId
@@ -100,7 +101,7 @@ final case class JsonLine(path: String, schema: Option[StructType] = None)
   * high-performance format.
   */
 final case class ParquetSource(path: String) extends Source {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = GraftSession.readParquet(spark, path)
   def write(df: DataFrame, mode: SaveMode): Unit =
     df.write.mode(mode).parquet(path)
 }
@@ -217,6 +218,6 @@ object Checkpoint {
     val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
     val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(success)) compute.write.mode(SaveMode.Overwrite).parquet(dir)
-    spark.read.parquet(dir)
+    GraftSession.readParquet(spark, dir)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Versioned key/value store — rebuild of
   * `VersionedKeyValSource[K,V]` (commons/source/
@@ -48,7 +49,7 @@ final case class VersionedKeyValStore(
   }
 
   def readVersion(spark: SparkSession, v: Long): DataFrame =
-    spark.read.parquet(s"$root/v=$v")
+    GraftSession.readParquet(spark, s"$root/v=$v")
 
   /** Write a full new version (old versions beyond `versionsToKeep`
     * are pruned, reference default 3,

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.core.GraftSession
 
 /** Structured-Streaming surface. The reference is strictly batch
   * (SURVEY §2.8): its incremental idioms are time-partitioned inputs,
@@ -226,7 +227,7 @@ object Streaming {
           val merged = versions.lastOption match {
             case Some(v) =>
               graft.sources.Scd2.applyDelta(
-                spark.read.parquet(s"$dir/v$v"), batch,
+                GraftSession.readParquet(spark, s"$dir/v$v"), batch,
                 keyCols, attrCols, tsCol)
             case None =>
               graft.sources.Scd2.fromEvents(batch, keyCols, attrCols, tsCol)
@@ -406,7 +407,7 @@ object Streaming {
           .filter(col("doc_id") === col("__minId")).drop("__minId")
           .persist()
         val store =
-          try spark.read.parquet(sigDir)
+          try GraftSession.readParquet(spark, sigDir)
           catch { case _: org.apache.spark.sql.AnalysisException =>
             Dedup.buildSignatureStore(exact.limit(0), "doc_id", "text")
           }
@@ -462,7 +463,7 @@ object Streaming {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
         val existing =
-          try spark.read.parquet(indexDir).select(col("id"))
+          try GraftSession.readParquet(spark, indexDir).select(col("id"))
           catch { case _: org.apache.spark.sql.AnalysisException =>
             inBatch.select(col("id")).limit(0)
           }

@@ -372,6 +372,33 @@ class CurationSpec extends SparkSpec {
     assert(got.getDouble(2) === 1.0 && got.getBoolean(3))
   }
 
+  test("lshQualityReport audits the banding it is given") {
+    import spark.implicits._
+    // ten pairs: the second doc swaps the last 6 of 40 words, so the
+    // pair's Jaccard is ~0.73 on 2- and 3-word shingles
+    val rows = (0 until 10).flatMap { i =>
+      val words = (0 until 40).map(j => s"w${i}_$j")
+      Seq((2L * i, words.mkString(" ")),
+        (2L * i + 1, (words.take(34) ++ (0 until 6).map(j => s"x${i}_$j")).mkString(" ")))
+    }
+    val df = rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
+    def report(cfg: (Int, Int, Int, Long)) = graft.ml.Dedup.lshQualityReport(
+      df, "doc_id", "text", threshold = 0.6, blockCols = Seq("lang"),
+      nHashes = cfg._1, bands = cfg._2, shingleWidth = cfg._3, seed = cfg._4)
+      .collect().head
+    // the default 32×4 banding catches every pair at s ≈ 0.73
+    val dflt = report((128, 32, 2, 42L))
+    assert(dflt.getLong(0) === 10L && dflt.getLong(1) === 10L)
+    // one band of 16 rows admits a pair at s ≈ 0.73 with p ≈ 0.7 %
+    val strict = report((16, 1, 3, 7L))
+    assert(strict.getLong(0) === 10L)
+    assert(strict.getLong(1) < 10L && !strict.getBoolean(3))
+    assert(strict.getLong(1) === graft.ml.Dedup.minHashNearDuplicates(df,
+      "doc_id", "text", threshold = 0.6, nHashes = 16, bands = 1,
+      shingleWidth = 3, seed = 7L).count())
+    graft.core.PipelineCaches.unpersistAll()
+  }
+
   test("matryoshkaRecall: full-width truncation recalls everything") {
     import spark.implicits._
     val vecs = Seq(

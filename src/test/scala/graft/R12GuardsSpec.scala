@@ -156,6 +156,31 @@ class R12GuardsSpec extends SparkSpec {
     assert(got.getDouble(4) == sen)
   }
 
+  test("mannKendall: a flat series (slopes mostly exactly 0) stays fast") {
+    import spark.implicits._
+    // 700 buckets of 5 events, every 97th of 6: ~2.4e5 slopes, ~96 %
+    // of them exactly 0.0. A quickselect that puts only the pivot in
+    // place moves one element per pass through that run: ~2e10 steps,
+    // over a minute on a 4-core host, against well under a second.
+    val n = 700
+    val y = (0 until n).map(b => if (b % 97 == 0) 6.0 else 5.0)
+    val secs = (0 until n).flatMap(b => Seq.fill(y(b).toInt)(b * 60L + 7))
+    val t0 = System.nanoTime()
+    val got = graft.events.Events.mannKendall(secs.toDF("sec"), "sec", 60L)
+      .collect()(0)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    // replay of the pair definition: every slope, sorted
+    val slopes = (for (i <- 0 until n; j <- (i + 1) until n)
+      yield (y(j) - y(i)) / (j - i)).toArray
+    java.util.Arrays.sort(slopes)
+    val s = (for (i <- 0 until n; j <- (i + 1) until n)
+      yield math.signum(y(j) - y(i)).toLong).sum
+    assert(got.getLong(0) == n.toLong)
+    assert(got.getLong(1) == s)
+    assert(got.getDouble(4) == slopes((slopes.length + 1) / 2 - 1))
+    assert(seconds < 20, f"flat series took $seconds%.1f s")
+  }
+
   test("mannKendall: grid past the exact-Sen cap fails with a remedy") {
     import spark.implicits._
     // two events 30k sec apart at periodSec=1 -> 30001 buckets ->
