@@ -367,7 +367,7 @@ object Bench {
     headline.foreach { name =>
       try runOne(spark, queries(name), "/root/testdata/sf0.001")
       catch { case _: Throwable => }
-      finally graft.ml.Dedup.unpersistPipelineCaches()
+      finally graft.core.PipelineCaches.unpersistAll()
     }
 
     def runList(load1Before: Double, stealBefore: Long): Attempt = {
@@ -381,7 +381,7 @@ object Bench {
         // drop pipeline caches a query persisted before timing the next
         // one — resident blocks from earlier queries otherwise squeeze
         // executor memory and skew later numbers
-        graft.ml.Dedup.unpersistPipelineCaches()
+        graft.core.PipelineCaches.unpersistAll()
         name -> (if (ok) dt else -1.0)
       }
       val (load1After, stealAfter) = loadEvidence()

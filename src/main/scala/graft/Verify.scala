@@ -36,7 +36,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }
-      finally graft.ml.Dedup.unpersistPipelineCaches()
+      finally graft.core.PipelineCaches.unpersistAll()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -87,6 +87,19 @@ object GraftSession {
       // representation, so the engine tolerates the writer changing
       // timestamp precision between data drops.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Janino compiles each stage's generated Java into one JVM-wide
+      // class cache, which Spark caps at 100 entries; a pass whose
+      // working set is larger recompiles what the pass before evicted.
+      // Measured working sets (distinct generated classes a pass): the
+      // benchmark's short_ops 112 and pipeline_jobs 97; one pass of
+      // Bench's 159-query list 2718 at sf0.001 and 2729 at sf0.01. A
+      // sf0.01 pass after a sf0.001 warm-up (Bench's shape) compiled
+      // 4188 classes at 100 entries and 198 at 4096. A cached class
+      // holds ~8 KB of metaspace and its ~10 KB source as the key, so
+      // 4096 entries cost at most ~34 MB metaspace and ~40 MB heap.
+      // Static: read once, at the JVM's first codegen, which this
+      // session factory precedes.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** Read one of the star-schema tables from a scale-factor directory. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -1725,10 +1725,11 @@ object Events {
     * quadratic pair set and ran a single-partition window over it),
     * the tie term and n off the same array, and the Sen slope by
     * exact enumeration + quickselect while m = n(n−1)/2 fits the
-    * in-kernel cap (2²⁷ slopes ≈ 1 GB — n ≤ ~16 000 buckets). Above
-    * the cap it FAILS LOUDLY with the remedy (coarsen periodSec):
-    * bounding the grid is the contract, and a loud bound beats the
-    * old form's silent multi-TB pair shuffle.
+    * in-kernel cap (2²⁷ slopes ≈ 1 GB — n ≤ 16 384 buckets). Above
+    * the cap it FAILS LOUDLY with the remedy (coarsen periodSec),
+    * checked on the 1-row span before the grid is built: bounding the
+    * grid is the contract, and a loud bound beats the old form's
+    * silent multi-TB pair shuffle.
     */
   def mannKendall(events: DataFrame, secCol: String,
       periodSec: Long): DataFrame = {
@@ -1737,8 +1738,16 @@ object Events {
       .select(floor(col(secCol) / periodSec).cast("long").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("y"))
     val spans = counts.agg(min("bucket").as("b0"), max("bucket").as("b1"))
+    // the cap is checked on the 1-row span, in-plan: an oversized grid
+    // fails before any task builds it, and no eager job is added
+    val nBuckets = col("b1") - col("b0") + 1
     val dense = spans
-      .select(explode(sequence(col("b0"), col("b1"))).as("bucket"))
+      .select(explode(when(nBuckets > mkMaxBuckets, raise_error(concat(
+          lit("mannKendall: "), nBuckets.cast("string"),
+          lit(s" buckets exceed the exact Sen-slope cap of $mkMaxBuckets " +
+            s"($mkMaxExactPairs pairwise slopes); coarsen periodSec " +
+            "so the bucket grid stays bounded"))))
+        .otherwise(sequence(col("b0"), col("b1")))).as("bucket"))
       .join(counts, Seq("bucket"), "left")
       .select(col("bucket"), coalesce(col("y"), lit(0L))
         .cast("double").as("y"))
@@ -2240,11 +2249,17 @@ object Events {
   }
 
   /** In-kernel exact-Sen cap: 2²⁷ pairwise slopes ≈ 1 GB of doubles
-    * in one task — n ≤ ~16 000 buckets. Past it the kernel throws
-    * with the remedy instead of silently allocating (or, as the old
-    * pair-join form did, silently shuffling a multi-TB pair set).
+    * in one task. [[mannKendall]] rejects a larger grid with the remedy
+    * instead of silently allocating (or, as the old pair-join form did,
+    * silently shuffling a multi-TB pair set).
     */
   private[events] val mkMaxExactPairs: Long = 1L << 27
+
+  /** The largest grid whose n(n−1)/2 slopes fit [[mkMaxExactPairs]]:
+    * 16 384 buckets. [[mannKendall]] checks it before the kernel runs.
+    */
+  private[events] val mkMaxBuckets: Long =
+    ((1 + math.sqrt(1 + 8.0 * mkMaxExactPairs)) / 2).toLong
 
   /** Mann–Kendall single-row kernel over the time-ordered dense
     * series: S = Σ_{i<j} sign(y_j − y_i) by merge-sort inversion
@@ -2311,11 +2326,6 @@ object Events {
       }
       val d = mergeCount(0, n)
       val s = m - tiedPairs - 2 * d
-      if (m > mkMaxExactPairs)
-        throw new IllegalArgumentException(
-          s"mannKendall: $n buckets -> $m pairwise slopes exceeds the " +
-            s"exact Sen-slope cap $mkMaxExactPairs; coarsen periodSec " +
-            "so the bucket grid stays bounded")
       val slopes = new Array[Double](m.toInt)
       var k = 0
       i = 0

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob, GraftSession}
+import graft.core.{Args, GraftJob, GraftSession, PipelineCaches}
 import graft.ml.{Dedup, Profile, TextAnalysis}
 
 /** End-to-end training-corpus preparation — the pipeline this engine's
@@ -39,7 +39,7 @@ class CorpusPrepJob(args: Args) extends GraftJob(args) {
       holdout = args.getOrElse("holdout", "0.01").toDouble)
     out.write.partitionBy("split", "lang")
       .mode("overwrite").parquet(args("output"))
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 }
 

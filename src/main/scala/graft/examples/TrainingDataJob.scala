@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob, GraftSession}
+import graft.core.{Args, GraftJob, GraftSession, PipelineCaches}
 import graft.ml.{Corpus, Dedup}
 
 /** The full training-data assembly line, [[CorpusPrepJob]] carried
@@ -87,7 +87,7 @@ class TrainingDataJob(args: Args) extends GraftJob(args) {
     r.vocab.foreach(_.write.mode("overwrite").parquet(s"$out/vocab"))
     r.modelEval.foreach(
       _.write.mode("overwrite").parquet(s"$out/model_eval"))
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 }
 

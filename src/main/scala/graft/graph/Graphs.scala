@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.PipelineCaches.persistTracked
+
 /** Distributed graph statistics beyond the component/propagation
   * family (graft.ml.Dedup.connectedComponents, Matrix.propagate).
   *
@@ -799,9 +801,6 @@ object Graphs {
         (col("da") + col("db") - col("common_neighbors")))
       .select("a", "b", "common_neighbors", "jaccard", "adamic_adar")
   }
-
-  private def persistTracked(df: DataFrame): DataFrame =
-    graft.core.PipelineCaches.persistTracked(df)
 
   /** Power-law tail exponent of the degree distribution by the Hill
     * / discrete-MLE estimator (Clauset–Shalizi–Newman 2009 eq. 3.7):

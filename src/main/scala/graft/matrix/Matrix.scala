@@ -55,7 +55,7 @@ final case class Matrix(df: DataFrame) {
     *
     * The self-join is hinted SHUFFLE_HASH: both inputs are the same
     * relation, so the sort-merge plan sorts the data twice for no
-    * benefit (measured 1.4× slower at sf0.1 — tools/GramBench). Hash
+    * benefit (measured 1.4× slower at sf0.1). Hash
     * build sides hold one key-partition of A; AQE skew-join splits
     * oversized contraction keys (supported for shuffled-hash since
     * Spark 3.2). Pass `preferShuffleHash = false` to let Catalyst

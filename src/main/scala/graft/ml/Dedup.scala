@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.PipelineCaches.persistTracked
+
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard. Designed scale-first:
   *
@@ -19,24 +21,6 @@ import org.apache.spark.sql.functions._
   * public MinHash-LSH construction (Broder '97).
   */
 object Dedup {
-
-  /** Caches created by the discovery pipelines (the signature scan
-    * feeds both candidate generation and verification, so it is
-    * persisted rather than recomputed). Spark evicts persisted blocks
-    * LRU under memory pressure, but long-lived sessions should drop
-    * them eagerly once a pipeline's results are consumed.
-    */
-  private def persistTracked(df: DataFrame): DataFrame =
-    graft.core.PipelineCaches.persistTracked(df)
-
-  /** Unpersist every tracked pipeline cache (delegates to the shared
-    * [[graft.core.PipelineCaches]] registry — matrix pipelines track
-    * there too). Call after consuming a pipeline's output (results
-    * already computed stay valid; re-running the returned plan
-    * recomputes the scan).
-    */
-  def unpersistPipelineCaches(): Unit =
-    graft.core.PipelineCaches.unpersistAll()
 
   /** Word w-shingles of normalized text, hashed to 64-bit via
     * xxhash64 — the shingle *set* column used by both MinHash and

@@ -188,7 +188,7 @@ object MatrixQueries extends QueryGroup {
          |FROM C JOIN N n1 ON C.r1 = n1.row JOIN N n2 ON C.r2 = n2.row
          |WHERE round(dot / (n1.nrm * n2.nrm), 6) >= 0.15""".stripMargin) { (s, dir) =>
       val base = baseMatrix(s, dir)
-      // t tuned on tools/DimsumTune: max |est-exact| over the 4811
+      // t from a sweep against the exact gram: max |est-exact| over the 4811
       // sf0.01 contract pairs is 0.059 at t=650 (0.10 at t=500), with
       // 18% of entries sampled away. coalesce: vacuously true at SFs
       // where no pair clears the similarity threshold.

@@ -434,7 +434,7 @@ object Streaming {
           .write.mode("append").parquet(sigDir)
         accepted.unpersist(blocking = false)
         exact.unpersist(blocking = false)
-        Dedup.unpersistPipelineCaches()
+        graft.core.PipelineCaches.unpersistAll()
         ()
       }
       .start()

@@ -38,7 +38,7 @@ object MetricsDump {
       try queries(name)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
-      finally graft.ml.Dedup.unpersistPipelineCaches()
+      finally graft.core.PipelineCaches.unpersistAll()
       val df = queries(name)(spark, dir)
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
@@ -47,7 +47,7 @@ object MetricsDump {
       Thread.sleep(500)
       println(f"== $name: $dt%.2f s ==")
       if (lastQe != null) walk(lastQe.executedPlan, 0)
-      graft.ml.Dedup.unpersistPipelineCaches()
+      graft.core.PipelineCaches.unpersistAll()
     }
     spark.stop()
   }

@@ -33,7 +33,7 @@ object PlanDump {
         println(s"[plandump] $name ok (${s.length} chars)")
       } catch { case e: Throwable =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
-      } finally graft.ml.Dedup.unpersistPipelineCaches()
+      } finally graft.core.PipelineCaches.unpersistAll()
     }
     spark.stop()
   }

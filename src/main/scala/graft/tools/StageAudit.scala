@@ -133,7 +133,7 @@ object StageAudit {
           rows += s""""$name":{"error":true}"""
           (None, None)
         }
-        finally graft.ml.Dedup.unpersistPipelineCaches()
+        finally graft.core.PipelineCaches.unpersistAll()
       dom.foreach { case (st, share) =>
         val shareStr =
           String.format(java.util.Locale.ROOT, "%.3f", Double.box(share))

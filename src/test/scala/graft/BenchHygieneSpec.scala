@@ -1,7 +1,7 @@
 package graft
 
 /** Bench-isolation invariant: after a headline query executes and
-  * [[graft.ml.Dedup.unpersistPipelineCaches]] runs (exactly what
+  * [[graft.core.PipelineCaches.unpersistAll]] runs (exactly what
   * Bench.scala does between timed queries), the query must leave NO
   * NEW resident RDD blocks behind. A leftover cache squeezes executor
   * memory for every subsequent query: a resident cache set once
@@ -49,14 +49,14 @@ class BenchHygieneSpec extends SparkSpec {
   test("no headline bench query leaves a new resident cache after the cache drop") {
     val dir = sf("sf0.001")
     // best-effort baseline cleanup of droppable state
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
     spark.sharedState.cacheManager.clearCache()
     val leaks = Bench.headline.filter(SparkEntry.queries.contains).flatMap {
       name =>
         val before = spark.sparkContext.getPersistentRDDs.keySet
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
-        graft.ml.Dedup.unpersistPipelineCaches()
+        graft.core.PipelineCaches.unpersistAll()
         val after = spark.sparkContext.getPersistentRDDs
         val leaked = after.filterNot { case (id, _) => before.contains(id) }
         if (leaked.nonEmpty) {

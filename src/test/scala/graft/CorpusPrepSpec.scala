@@ -46,7 +46,7 @@ class CorpusPrepSpec extends SparkSpec {
     val h = s1.values.count(_ == "holdout").toDouble
     assert(h > 0 && h / n < 0.5, s"holdout fraction ${h / n}")
     out.unpersist()
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("groupSplit accepts holdout = 0 like the per-doc path: everything lands in train") {
@@ -59,6 +59,6 @@ class CorpusPrepSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(splits.subsetOf(Set("train")), s"unexpected splits: $splits")
     assert(out.count() > 0)
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.PipelineCaches
 import graft.ml.{Dedup, Multimodal, Similarity, TextAnalysis => TA}
 
 /** LLM-pipeline operators: dedup discovery recall, ANN recall vs
@@ -49,10 +50,10 @@ class MlSpec extends SparkSpec {
     // drop exactly the caches this pipeline created
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "pipeline should have persisted its signature scan")
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
     val remaining = spark.sparkContext.getPersistentRDDs.keySet
     assert(added.forall(id => !remaining.contains(id)),
-      "tracked pipeline caches leaked after unpersistPipelineCaches()")
+      "tracked pipeline caches leaked after PipelineCaches.unpersistAll()")
   }
 
   test("prefixFilterJaccardPairs equals brute-force all-pairs Jaccard") {
@@ -289,7 +290,7 @@ class MlSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 5L).forall(comp(_) == 1L), s"chain not collapsed: $comp")
     assert(comp(10L) == 10L && comp(11L) == 10L)
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("large/small-star components agree with label propagation on chains, hubs, and random graphs") {
@@ -319,7 +320,7 @@ class MlSpec extends SparkSpec {
     val b = Dedup.connectedComponentsStar(random).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b, s"labelings diverge: ${a.toSet.diff(b.toSet)}")
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("projectedTopK: JL-coarse + exact re-rank recovers most of exact top-k") {
@@ -393,7 +394,7 @@ class MlSpec extends SparkSpec {
     // anyway, but the contract is that the store is never self-joined)
     assert(pairs.forall { case (a, b) => b == 2L || b == 4L || b == 40L },
       s"pair not touching the new batch: $pairs")
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("incremental dedup survives autoBroadcastJoinThreshold=-1 (broadcast disabled)") {
@@ -415,7 +416,7 @@ class MlSpec extends SparkSpec {
       assert(pairs.contains((1L, 2L)), s"pair missing with broadcast off: $pairs")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      Dedup.unpersistPipelineCaches()
+      PipelineCaches.unpersistAll()
     }
   }
 
@@ -444,7 +445,7 @@ class MlSpec extends SparkSpec {
     assert(groups(1L) == 1L && groups(2L) == 1L)
     assert(groups(3L) == 3L && groups(4L) == 3L)
     assert(groups(5L) == 5L)
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("simhash of near-identical text is near in hamming distance") {
@@ -511,7 +512,7 @@ class MlSpec extends SparkSpec {
     }
     val recall = ivfPairs.toSet.size.toDouble / exactPairs.size
     assert(recall >= 0.8, s"IVF range recall too low: $recall")
-    graft.ml.Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("language ID on real-language samples") {
@@ -752,7 +753,7 @@ class MlSpec extends SparkSpec {
       s"shorter copy aligns exactly its own frames: $got")
     assert(!got.keys.exists(p => p._1 == 5L || p._2 == 5L),
       s"unrelated video paired: $got")
-    graft.ml.Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("multimodal decode + frame sampling plumbing") {

@@ -307,7 +307,7 @@ class PlanLintSpec extends SparkSpec {
           .map(f => s"$name: ${f.rule} (${f.node})")
     }
     graft.core.PipelineCaches.unpersistAll()
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
     assert(violations.isEmpty,
       s"unwhitelisted scale smells:\n  ${violations.mkString("\n  ")}")
     // the whitelist may not go stale: every entry must still be

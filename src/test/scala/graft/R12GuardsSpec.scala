@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PairFunctions
 import graft.graph.Graphs
@@ -192,6 +197,45 @@ class R12GuardsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("coarsen periodSec"),
       s"wrong error: ${e.getMessage}")
+  }
+
+  test("mannKendall: an oversized grid fails on its 1-row span, unbuilt") {
+    import spark.implicits._
+    // two events 2e6 sec apart at periodSec=1: 2,000,001 buckets, 122x
+    // the cap. The span check must fail the query before a task builds
+    // and collects the grid: building it takes seconds of task time,
+    // the check fails its task at the first row. A marker job in its own
+    // group closes the listener window (events arrive in order).
+    val n = 2000001L
+    val sc = spark.sparkContext
+    val marker = s"mk-cap-end-${System.nanoTime()}"
+    val failedTaskMs = new AtomicLong
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success && e.taskMetrics != null)
+          failedTaskMs.addAndGet(e.taskMetrics.executorRunTime)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[Exception] {
+        graft.events.Events
+          .mannKendall(Seq(0L, n - 1).toDF("sec"), "sec", 1L).collect()
+      }
+      assert(e.getMessage.contains(s"$n buckets exceed the exact Sen-slope cap") &&
+        e.getMessage.contains("coarsen periodSec"), s"wrong error: ${e.getMessage}")
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(failedTaskMs.get < 1000,
+      s"the failed task ran ${failedTaskMs.get} ms: the grid was built first")
   }
 
   test("mannKendall: single-bucket series yields null z and slope") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.PipelineCaches
 import graft.ml.Dedup
 
 /** Engine-side sf0.1 self-consistency for the 10 gate queries whose
@@ -118,7 +119,7 @@ class ScaleInvariantsSpec extends SparkSpec {
     relabeled.foreach { case (id, c) =>
       assert(a(id) == c, s"relabeling the star edges moved $id: ${a(id)} -> $c")
     }
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("blocked n-gram Jaccard at sf0.1 equals minhash pairs restricted to blocks") {
@@ -137,7 +138,7 @@ class ScaleInvariantsSpec extends SparkSpec {
     got.foreach { case (k, j) =>
       assert(math.abs(j - expected(k)) < 1e-6, s"$k: $j vs ${expected(k)}")
     }
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("incremental dedup at sf0.1 equals batch minhash restricted to delta-touching pairs") {
@@ -158,7 +159,7 @@ class ScaleInvariantsSpec extends SparkSpec {
     got.foreach { case (k, j) =>
       assert(math.abs(j - expected(k)) < 1e-6, s"$k: $j vs ${expected(k)}")
     }
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("keep-best at sf0.1: one representative per cluster, argmax rule, corpus preserved") {
@@ -196,7 +197,7 @@ class ScaleInvariantsSpec extends SparkSpec {
       assert(keepers.head._1 == best._1,
         s"quality: cluster $cluster kept ${keepers.head} over $best")
     }
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("self-verifying contract gates hold at sf0.1: semantic dedup recall, DIMSUM error bound") {
@@ -212,7 +213,7 @@ class ScaleInvariantsSpec extends SparkSpec {
       s"DIMSUM ±0.08 error contract failed at sf0.1: $dim")
     assert(dim.getAs[Boolean]("downsampled"),
       "DIMSUM sampled nothing away at sf0.1 — the scale path is inert")
-    Dedup.unpersistPipelineCaches()
+    PipelineCaches.unpersistAll()
   }
 
   test("PQ and IVF-PQ recall contracts hold at sf0.1") {
@@ -225,7 +226,7 @@ class ScaleInvariantsSpec extends SparkSpec {
       assert(bad.isEmpty,
         s"$gate recall contract failed at sf0.1 for qids " +
           bad.map(_.getAs[Long]("qid")).mkString(","))
-      graft.core.PipelineCaches.unpersistAll()
+      PipelineCaches.unpersistAll()
     }
   }
 

@@ -100,7 +100,7 @@ class TrainingDataSpec extends SparkSpec {
       assert(kept >= all - math.ceil(all * 0.25).toLong - 1,
         s"source ${r.getString(0)}: kept $kept of $all")
     }
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("c4 + line-dedup + model-gate + group-split stages compose and are deterministic") {
@@ -158,7 +158,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(r2.train.select("doc_id").as[Long].collect().sorted.toSeq ==
       train.map(_._1).sorted.toSeq)
     assert(r2.modelEval.get.head().getAs[Double]("auc") == auc)
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("keep-best representative + cluster-keyed split in prepare") {
@@ -194,7 +194,7 @@ class TrainingDataSpec extends SparkSpec {
       .select("cluster", "split").as[(Long, String)].collect().toMap
     assert(withSplit(2L) == expected(1L), "rep must inherit its cluster's split")
     assert(withSplit(3L) == expected(3L))
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("span-dedup stage cuts cross-document duplicated spans before curation") {
@@ -244,7 +244,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(withSpan(1L).contains("the morning train to the city"))
     assert(withSpan(2L).contains("a small garden behind the house"))
     assert(withSpan(3L).contains("deep in the library the old maps"))
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("epoch-cap mix upsamples every source maxEpochs times under a loose budget") {
@@ -271,7 +271,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(manifestDocs.length == rows.length)
     val decoded = manifestDocs.map(_.toLong).map(c => (c / 3L, c % 3L)).toSet
     assert(decoded == rows.map(t => (t._1, t._2)).toSet)
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("tokenize stage: every train doc encoded to ids, lossless, dense vocab") {
@@ -303,7 +303,7 @@ class TrainingDataSpec extends SparkSpec {
           .replace(graft.ml.Bpe.Eow, "")
         assert(detok == norm, s"$tok round-trip for doc $id")
       }
-      graft.ml.Dedup.unpersistPipelineCaches()
+      graft.core.PipelineCaches.unpersistAll()
     }
     // unknown tokenizer name is rejected
     intercept[IllegalArgumentException] {
@@ -311,7 +311,7 @@ class TrainingDataSpec extends SparkSpec {
         jaccard = 0.7, holdout = 0.2, budget = 100000L, ctxLen = 128,
         nShards = 4, stages = TrainingDataJob.Stages(tokenizer = "wordpiece"))
     }
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("whole-doc packing mode: every doc intact in one bin, bins within ctx") {
@@ -346,7 +346,7 @@ class TrainingDataSpec extends SparkSpec {
         jaccard = 0.7, holdout = 0.2, budget = 100000L, ctxLen = ctx,
         nShards = 4, stages = TrainingDataJob.Stages(packing = "nextfit"))
     }
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("mixOrdered: budget takes the best-quality docs per source") {
@@ -373,7 +373,7 @@ class TrainingDataSpec extends SparkSpec {
     // quality than a selected one unless adding it would overflow --
     // check the simpler dominance property on a sample source:
     // selected docs are a prefix of the quality-desc order
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 
   test("sortish stage: bucket/key columns match the standalone operator") {
@@ -403,6 +403,6 @@ class TrainingDataSpec extends SparkSpec {
         .map(x => f"$x%02x").mkString
       assert(k == expK)
     }
-    graft.ml.Dedup.unpersistPipelineCaches()
+    graft.core.PipelineCaches.unpersistAll()
   }
 }
