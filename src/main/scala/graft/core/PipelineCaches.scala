@@ -19,12 +19,18 @@ object PipelineCaches {
   private val clearHooks =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  /** Track a directly-persisted RDD (the lineage-truncation path —
-    * [[org.apache.spark.sql.graft.Lineage.truncateTracked]] — persists
-    * at the RDD level where Dataset.unpersist can't reach).
+  /** Track a directly-persisted RDD (the lineage cut —
+    * [[org.apache.spark.sql.graft.Lineage.cut]] — persists at the RDD
+    * level where Dataset.unpersist can't reach).
     */
   def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     trackedRdds.add(rdd)
+
+  /** Unpersist one tracked RDD now and stop tracking it. */
+  def releaseRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+    trackedRdds.remove(rdd)
+    rdd.unpersist(blocking = false)
+  }
 
   def persistTracked(df: DataFrame): DataFrame = {
     val p = df.persist()

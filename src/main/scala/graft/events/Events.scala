@@ -2,6 +2,7 @@ package graft.events
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 /** Event-sequence analytics over (user, timestamp, type) streams —
   * funnels and cohort retention, the two queries every large-scale
@@ -1182,15 +1183,14 @@ object Events {
     require(windows.nonEmpty && windows.forall(_ >= 2))
     val spark = events.sparkSession
     import spark.implicits._
-    val perDay = events
+    val perDay = Lineage.cut(events
       .select(floor(col(secCol) / 86400L).cast("long").as("day"),
         col(userCol).cast("string").as("u"))
       .groupByKey(_.getLong(0))
       .mapValues(_.getString(1))
       .agg(graft.agg.Hll.aggregator(err).toColumn.name("sk"))
       .map { case (d, sk) => (d, graft.agg.Hll.toBytes(sk)) }
-      .toDF("day", "sk")
-      .localCheckpoint()
+      .toDF("day", "sk"))
     val exact = events
       .select(floor(col(secCol) / 86400L).cast("long").as("day"),
         col(userCol).as("u"))

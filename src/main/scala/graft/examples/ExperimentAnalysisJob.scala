@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 import graft.core.{Args, GraftJob, GraftSession, Ts}
 import graft.events.Events
@@ -96,13 +97,12 @@ object ExperimentAnalysisJob {
       topK: Int = 3, bootstrapReps: Int = 200): Map[String, DataFrame] = {
     require(arms >= 2, "arms must be >= 2")
     val ev0 = events.withColumn("sec", Ts.seconds(events))
-    val ev = (if (variantCol.nonEmpty)
+    val ev = Lineage.cut((if (variantCol.nonEmpty)
         ev0.withColumn("variant", col(variantCol).cast("string"))
       else
         ev0.withColumn("variant",
           graft.ml.Profile.fibScramble(col("user_id")) % arms))
-      .withColumn("variant", col("variant").cast("string"))
-      .localCheckpoint()
+      .withColumn("variant", col("variant").cast("string")))
     val split =
       if (splitSec > 0) splitSec
       else {

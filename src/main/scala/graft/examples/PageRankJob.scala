@@ -1,16 +1,17 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob, GraftSession}
+import org.apache.spark.sql.graft.Lineage
+import graft.core.{Args, GraftJob, GraftSession, PipelineCaches}
 import graft.matrix.Matrix
 
 /** PageRank as a driver-loop job — parity with the reference's
   * iterative `Job.next` idiom (examples/PageRank.scala:22-81): run
   * until the rank delta drops under `--convergence` or `--maxiters`
   * is hit, reading the error scalar back at the driver
-  * (readAtSubmitter). Lineage is cut every iteration via persist (the
-  * reference wrote temp files between steps).
+  * (readAtSubmitter). Lineage is cut every iteration by
+  * [[Lineage.iterate]] (the reference wrote temp files between steps).
   *
   * Args: --edges <parquet src,dst[,weight]> --output <dir>
   *       [--damping 0.85] [--maxiters 20] [--convergence 0.001]
@@ -32,27 +33,20 @@ class PageRankJob(args: Args) extends GraftJob(args) {
 
     val nodes = stochastic.df.select(col("row")).unionByName(
       stochastic.df.select(col("col").as("row"))).distinct()
-    var ranks: DataFrame = nodes.withColumn("val", lit(1.0)).persist()
-
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < maxIters && delta > eps) {
-      val next = stochastic.propagate(ranks)
+    val ranks = Lineage.iterate(nodes.withColumn("val", lit(1.0)), maxIters) { ranks =>
+      stochastic.propagate(ranks)
         .select(col("row"), (col("val") * damping + (1 - damping)).as("val"))
         // nodes with no inbound edges keep the teleport mass
         .unionByName(nodes.join(
           stochastic.df.select(col("col").as("row")).distinct(),
           Seq("row"), "left_anti").withColumn("val", lit(1 - damping)))
-        .persist()
+    } { (prev, next) =>
       // convergence scalar read back at the driver
-      delta = next.alias("n")
-        .join(ranks.alias("p"), "row")
+      next.ds.alias("n").join(prev.ds.alias("p"), "row")
         .agg(sum(abs(col("n.val") - col("p.val"))).as("d"))
-        .collect().head.getDouble(0)
-      ranks.unpersist()
-      ranks = next
-      iter += 1
+        .collect().head.getDouble(0) <= eps
     }
     ranks.write.mode("overwrite").parquet(args("output"))
+    PipelineCaches.unpersistAll()
   }
 }

@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 import graft.core.{Args, GraftJob, GraftSession, PipelineCaches}
 import graft.ml.{Corpus, Dedup}
 
@@ -165,22 +166,20 @@ object TrainingDataJob {
       sortishCutoffs: Seq[Double] = Nil,
       sortishSalt: Long = 0L)
 
-  /** Eager lineage cut between assembly stages. Five operator families
-    * chained into one logical plan (curate's LSH joins + components
-    * loop, the contamination join, the fluency window, the mix window,
-    * the pack window) produce a tree deep enough to overflow the stack
-    * when Spark *renders* it (explain / error paths / codegen walk) —
-    * the same reason the reference's iterative idiom restarts lineage
-    * every step (reference `examples/PageRank.scala:54-81`). The cut
-    * also caches the stage output, so the two-consumer stages below
-    * (train/holdout split, fluency self-join) compute their input once.
-    * `localCheckpoint` blocks are executor-local (not fault-tolerant);
-    * a 100 TB run that must survive executor loss should swap this for
-    * `checkpoint()` against a reliable dir — the plan shape is
-    * identical.
+  /** Assembly stages are separated by eager [[Lineage.cut]]s. Five
+    * operator families chained into one logical plan (curate's LSH
+    * joins + components loop, the contamination join, the fluency
+    * window, the mix window, the pack window) produce a tree deep
+    * enough to overflow the stack when Spark *renders* it (explain /
+    * error paths / codegen walk) — the same reason the reference's
+    * iterative idiom restarts lineage every step (reference
+    * `examples/PageRank.scala:54-81`). The cut also caches the stage
+    * output, so the two-consumer stages below (train/holdout split,
+    * fluency self-join) compute their input once. A lost cut block is
+    * recomputed from its RDD lineage, so executor loss costs a
+    * recompute, not the run; [[PipelineCaches.unpersistAll]] frees
+    * the cuts once the outputs are written.
     */
-  private def cut(df: DataFrame): DataFrame = df.localCheckpoint()
-
   def assemble(docs: DataFrame, lang: String, minQuality: Double,
       jaccard: Double, holdout: Double, budget: Long, ctxLen: Int,
       nShards: Int, nllDropFrac: Double = 0.0,
@@ -234,7 +233,7 @@ object TrainingDataJob {
       if (stages.modelGate <= 0.0) (spanDeduped, None)
       else {
         val w = QualityModel.train(spanDeduped, "text")
-        val scored = cut(QualityModel.score(spanDeduped, "text", w))
+        val scored = Lineage.cut(QualityModel.score(spanDeduped, "text", w))
         val eval =
           if (!stages.evalReport) None
           else Some(graft.ml.Eval.rocAuc(scored, "score", "label")
@@ -248,7 +247,7 @@ object TrainingDataJob {
 
     // 1-6: curate (keeps doc_id, text, lang, quality, n_tokens, split).
     // `source` survives via join-back below so mixing can see it.
-    val curated = cut(CorpusPrepJob.prepare(classified, lang, minQuality,
+    val curated = Lineage.cut(CorpusPrepJob.prepare(classified, lang, minQuality,
         jaccard, holdout, stages.keepBestRep, stages.groupSplit)
       .join(docs.select("doc_id", "source"), "doc_id"))
 
@@ -271,7 +270,7 @@ object TrainingDataJob {
     // normalized text has zero tokens (no NLL row) regardless of the
     // fraction — such docs carry no trainable text, so the gate
     // treats them as maximally non-fluent by construction.
-    val screened = cut(cleanTrain)
+    val screened = Lineage.cut(cleanTrain)
     val fluent =
       if (nllDropFrac <= 0.0) screened
       else Corpus.dropBottomByScore(
@@ -296,7 +295,7 @@ object TrainingDataJob {
     val base0 = if (stages.epochWeights.isEmpty) {
       // default: hash-random budget fill; mixOrdered: best-first by
       // the quality score, so the budget buys the best material
-      val mixed = cut(
+      val mixed = Lineage.cut(
         if (stages.mixOrdered)
           Corpus.mixByBudgetOrdered(fluent, "doc_id", "source",
             "n_tokens", "quality", budget)
@@ -314,7 +313,7 @@ object TrainingDataJob {
     } else {
       val plan = Corpus.mixByEpochs(fluent, "doc_id", "source",
         "n_tokens", stages.epochWeights, budget, stages.maxEpochs)
-      val expanded = cut(fluent.join(
+      val expanded = Lineage.cut(fluent.join(
         plan.select("doc_id", "epoch", "n_epochs"), "doc_id"))
       val stride = stages.maxEpochs + 1L
       val manifest = manifestOf(
@@ -374,7 +373,7 @@ object TrainingDataJob {
       val pieceList = encoded.flatMap(_._2.iterator).distinct()
         .collect().sortWith(Bpe.ltUtf8) // vocab-bounded
       val pieceId = pieceList.zipWithIndex.toMap
-      val tokens = cut(encoded
+      val tokens = Lineage.cut(encoded
         .map { case (d, ps) => (d, ps.map(pieceId)) }
         .toDF("doc_id", "token_ids"))
       encoded.unpersist(blocking = false)

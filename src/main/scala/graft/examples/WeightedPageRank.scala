@@ -2,7 +2,8 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Args, GraftJob, GraftSession}
+import org.apache.spark.sql.graft.Lineage
+import graft.core.{Args, GraftJob, GraftSession, PipelineCaches}
 import graft.matrix.{ColVector, Matrix}
 
 /** Weighted PageRank — port of the reference's adjacency-list job
@@ -95,30 +96,19 @@ class WeightedPageRankJob(args: Args) extends GraftJob(args) {
     val threshold = args.getOrElse("threshold", "0.001").toDouble
     val maxIters = args.getOrElse("maxiterations", "20").toInt
 
-    val nodes = GraftSession.readParquet(spark, args("nodes")).localCheckpoint()
+    val nodes = Lineage.cut(GraftSession.readParquet(spark, args("nodes")))
     val n = nodes.count()
-    // `checkpointed` tracks the frame actually holding blocks so each
-    // superseded iteration is released — unpersisting a derived select
-    // would miss them, and a long run would pin every iteration's rank
-    // table in storage
-    var checkpointed = nodes
-      .select(col("src_id"), col("mass_prior").as("mass_input"))
-      .localCheckpoint()
-    var ranks = checkpointed
-    var iter = 0
-    var diff = Double.MaxValue
-    while (iter < maxIters && diff > threshold) {
-      val out = WeightedPageRank.iterate(nodes, ranks, alpha, weighted, n)
-        .localCheckpoint()
-      diff = WeightedPageRank.totalDiff(out)
-      checkpointed.unpersist(blocking = false)
-      checkpointed = out
-      ranks = out.select(col("src_id"), col("mass_n").as("mass_input"))
-      iter += 1
-    }
-    ranks.select(col("src_id"), col("mass_input").as("mass"))
+    // the iterate is the doPageRank output; mass_n feeds the next step
+    val seed = nodes.select(col("src_id"), col("mass_prior").as("mass_n"),
+      col("mass_prior").as("mass_input"))
+    val out = Lineage.iterate(seed, maxIters) { out =>
+      WeightedPageRank.iterate(nodes,
+        out.select(col("src_id"), col("mass_n").as("mass_input")),
+        alpha, weighted, n)
+    }((_, next) => WeightedPageRank.totalDiff(next.ds) <= threshold)
+    out.select(col("src_id"), col("mass_n").as("mass"))
       .write.mode("overwrite").parquet(args("output"))
-    checkpointed.unpersist(blocking = false)
+    PipelineCaches.unpersistAll()
   }
 }
 

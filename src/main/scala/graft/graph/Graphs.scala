@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.Lineage
+
 import graft.core.PipelineCaches.persistTracked
 
 /** Distributed graph statistics beyond the component/propagation
@@ -194,32 +196,23 @@ object Graphs {
     * for graph-informed corpus filtering.
     *
     * Scale shape: each round is one degree aggregate + two anti-joins
-    * against the (tiny, shrinking) below-threshold node set, with a
-    * `localCheckpoint` lineage cut per round (the [[graft.ml.Dedup
-    * .connectedComponents]] iteration idiom); rounds are bounded by
-    * the peeling depth, ≈ O(log n) on real graphs. The convergence
-    * probe is one driver-side count of the just-removed set — a
-    * scalar, nothing distributed is retained.
+    * against the (tiny, shrinking) below-threshold node set, with one
+    * [[Lineage.iterate]] cut per round; rounds are bounded by the
+    * peeling depth, ≈ O(log n) on real graphs. Every node of the edge
+    * set has degree ≥ 1, so a round that removes no edge found no
+    * node below k: the fixpoint test is the cut's own row count.
     */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
       dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
     require(k >= 1, "k must be at least 1")
-    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val deg = e.select(col("u").as("node"))
+    val e = Lineage.iterate(canonicalEdges(edges, srcCol, dstCol), maxIter) { e =>
+      val low = e.select(col("u").as("node"))
         .unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
-      val low = deg.filter(col("degree") < k)
-        .select("node").localCheckpoint()
-      if (low.isEmpty) converged = true
-      else e = e
-        .join(low.select(col("node").as("u")), Seq("u"), "left_anti")
+        .filter(col("degree") < k).select("node")
+      e.join(low.select(col("node").as("u")), Seq("u"), "left_anti")
         .join(low.select(col("node").as("v")), Seq("v"), "left_anti")
-        .localCheckpoint()
-      i += 1
-    }
+    }((prev, next) => next.rows == prev.rows)
     e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -238,16 +231,11 @@ object Graphs {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = canonicalEdges(edges, srcCol, dstCol)
-    val und = e0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(e0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint()
-    var est = und.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).as("est")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = und
-        .join(est.select(col("node").as("b"), col("est").as("nb")), "b")
+    val und = Lineage.cut(e0.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(e0.select(col("v").as("a"), col("u").as("b"))))
+    val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("est"))
+    val est = Lineage.iterate(deg, maxIter) { est =>
+      und.join(est.select(col("node").as("b"), col("est").as("nb")), "b")
         .as[(Long, Long, Long)]
         .map { case (_, a, nb) => (a, nb) }
         .groupByKey(_._1)
@@ -261,12 +249,9 @@ object Graphs {
           while (idx >= 0 && vs(idx) >= h + 1) { h += 1; idx -= 1 }
           (node, h)
         }
-        .toDF("node", "next").localCheckpoint()
-      val joined = est.join(next, "node")
-      converged = joined.filter(col("next") =!= col("est")).isEmpty
-      est = next.select(col("node"), col("next").as("est"))
-      i += 1
-    }
+        .toDF("node", "est")
+    }((prev, next) => next.ds.join(prev.ds.withColumnRenamed("est", "prev"), "node")
+      .filter(col("est") =!= col("prev")).isEmpty)
     est.select(col("node"), col("est").as("core"))
   }
 
@@ -283,8 +268,8 @@ object Graphs {
     * (node, weight) — normalized internally, broadcast (seed sets are
     * small by contract). Per iteration: one ranks⋈edges shuffle + one
     * contribution aggregate + a scalar dangling probe + a broadcast
-    * restart join, `localCheckpoint` lineage cut — O(m) at any
-    * iteration count.
+    * restart join, a [[Lineage.iterate]] cut — O(m) at any iteration
+    * count.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       alpha: Double = 0.15, iters: Int = 20, srcCol: String = "src",
@@ -299,25 +284,23 @@ object Graphs {
         col(dstCol).cast("long").as("dst"), lit(1.0).as("w"))
     }
     val outW = e0.groupBy("src").agg(sum("w").as("outw"))
-    val eNorm = e0.join(outW, "src")
-      .select(col("src"), col("dst"), (col("w") / col("outw")).as("p"))
-      .localCheckpoint()
+    val eNorm = Lineage.cut(e0.join(outW, "src")
+      .select(col("src"), col("dst"), (col("w") / col("outw")).as("p")))
     val restart0 = seeds.select(col("node").cast("long").as("src"),
       col("weight").cast("double").as("rw")).filter(col("rw") > 0)
     val sTot = restart0.agg(coalesce(sum("rw"), lit(0.0))).head().getDouble(0)
     require(sTot > 0, "seeds must carry positive weight")
-    val restart = broadcast(restart0
-      .select(col("src"), (col("rw") / sTot).as("restart"))
-      .localCheckpoint())
-    val nodes = e0.select("src")
+    val restart = broadcast(Lineage.cut(restart0
+      .select(col("src"), (col("rw") / sTot).as("restart"))))
+    val nodes = Lineage.cut(e0.select("src")
       .unionAll(e0.select(col("dst").as("src")))
       .unionAll(restart.select("src"))
-      .distinct().localCheckpoint()
-    var ranks = nodes.join(restart, Seq("src"), "left")
+      .distinct())
+    val ranks0 = nodes.join(restart, Seq("src"), "left")
       .select(col("src"), coalesce(col("restart"), lit(0.0)).as("r"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
+    // each iterate is cut: contrib is referenced twice, a lazy chain
+    // would double the plan per iteration
+    val ranks = Lineage.iterate(ranks0, iters) { ranks =>
       val contrib = ranks.join(eNorm, "src")
         .select(col("dst").as("src"), (col("r") * col("p")).as("c"))
         .groupBy("src").agg(sum("c").as("c"))
@@ -327,17 +310,14 @@ object Graphs {
       // iteration (the WeightedPageRank.iterate idiom)
       val dead = contrib.agg(
         (lit(1.0) - coalesce(sum("c"), lit(0.0))).as("__dead"))
-      ranks = nodes.join(contrib, Seq("src"), "left")
+      nodes.join(contrib, Seq("src"), "left")
         .join(restart, Seq("src"), "left")
         .crossJoin(broadcast(dead))
         .select(col("src"),
           (lit(alpha) * coalesce(col("restart"), lit(0.0)) +
             lit(1 - alpha) * (coalesce(col("c"), lit(0.0)) +
               col("__dead") * coalesce(col("restart"), lit(0.0)))).as("r"))
-        .localCheckpoint() // eager: contrib is referenced twice, a lazy
-      // chain would double the plan per iteration
-      i += 1
-    }
+    }((_, _) => false)
     ranks.select(col("src").as("node"), col("r").as("ppr"))
   }
 
@@ -357,35 +337,27 @@ object Graphs {
     * Scale shape per round: one edge-keyed join to attach neighbor
     * labels, one (node, label) count aggregate, one per-node argmax
     * (max_by over a (count, -label) struct — a hash aggregate, not a
-    * window), `localCheckpoint` lineage cut; all shuffles O(m).
-    * Convergence probe is a scalar count.
+    * window), a [[Lineage.iterate]] cut; all shuffles O(m).
+    * Convergence probe is an emptiness check of the changed labels.
     */
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxIter: Int = 20): DataFrame = {
     val e0 = canonicalEdges(edges, srcCol, dstCol)
-    val und = e0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(e0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint()
+    val und = Lineage.cut(e0.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(e0.select(col("v").as("a"), col("u").as("b"))))
     val nodes = und.select(col("a").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val labels0 = nodes.select(col("node"), col("node").as("label"))
+    val labels = Lineage.iterate(labels0, maxIter) { labels =>
       val votes = und
         .join(labels.select(col("node").as("b"), col("label")), "b")
         .select(col("a").as("node"), col("label"))
         .unionAll(labels.select(col("node"), col("label"))) // self-vote
         .groupBy("node", "label").agg(count(lit(1)).as("n"))
-      val next = votes.groupBy("node")
+      votes.groupBy("node")
         .agg(max_by(col("label"), struct(col("n"), (-col("label")).as("t")))
           .as("label"))
-        .localCheckpoint()
-      converged = labels.join(next.withColumnRenamed("label", "nl"), "node")
-        .filter(col("nl") =!= col("label")).isEmpty
-      labels = next
-      i += 1
-    }
+    }((prev, next) => prev.ds.join(next.ds.withColumnRenamed("label", "nl"), "node")
+      .filter(col("nl") =!= col("label")).isEmpty)
     // canonicalize community ids to the minimum label per community —
     // labels are already node ids, so this is one aggregate + join
     val canon = labels.groupBy("label")
@@ -425,11 +397,15 @@ object Graphs {
     *
     * Scale shape: the adjacency (both directions) is persisted once
     * and re-joined per round; round k shuffles only frontier-incident
-    * edges plus an O(|reached|) anti-join — total traffic O(m + n)
-    * across all rounds, never O(m·rounds) for the visited set. A
-    * driver-side `isEmpty` on the (persisted) frontier stops early,
-    * and per-round persists cut the lineage so round 20 doesn't
-    * re-plan round 1.
+    * edges (the frontier is the visited set's rows at distance k−1)
+    * plus an O(|reached|) full-outer merge into the visited set —
+    * never O(m·rounds). The merge is a shuffle join, so the visited
+    * set keeps the shuffle's partition count (a union would add the
+    * new rows' partitions every round, and a 200-hop path would run
+    * tens of thousands of tasks). The visited set is the
+    * [[Lineage.iterate]] iterate, cut per round so round 20 doesn't
+    * re-plan round 1; a round that reaches no new node stops the
+    * loop on the cut's row count.
     */
   def shortestHops(edges: DataFrame, sources: DataFrame,
       maxHops: Int = 10, srcCol: String = "src", dstCol: String = "dst",
@@ -438,29 +414,18 @@ object Graphs {
     val e = canonicalEdges(edges, srcCol, dstCol)
     val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .transform(persistTracked)
-    var dist = sources.select(col(nodeCol).cast("long").as("node"))
+    val seed = sources.select(col(nodeCol).cast("long").as("node"))
       .distinct()
       .withColumn("dist", lit(0L))
-      .transform(persistTracked)
-    var frontier = dist
     var hop = 0L
-    var done = maxHops == 0 || frontier.isEmpty
-    while (!done) {
+    Lineage.iterate(seed, maxHops) { dist =>
       hop += 1L
-      val next = frontier
-        .join(adj, frontier("node") === adj("u"))
+      val reached = dist.filter(col("dist") === hop - 1L)
+        .join(adj, col("node") === col("u"))
         .select(col("v").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .transform(persistTracked)
-      done = next.isEmpty
-      if (!done) {
-        dist = dist.unionAll(next).transform(persistTracked)
-        frontier = next
-        done = hop >= maxHops
-      }
-    }
-    dist
+      dist.join(reached, Seq("node"), "full_outer")
+        .select(col("node"), coalesce(col("dist"), lit(hop)).as("dist"))
+    }((prev, next) => next.rows == prev.rows)
   }
 
   /** Per-landmark BFS hop distances — [[shortestHops]] generalized to
@@ -470,8 +435,8 @@ object Graphs {
     * `maxHops` of each landmark.
     *
     * Scale shape per hop: one frontier⋈adjacency hash join + distinct
-    * + anti-join against the visited set, state O(k·n) rows max;
-    * lineage cut per hop via persistTracked.
+    * + a full-outer merge into the visited set, state O(k·n) rows max;
+    * one [[Lineage.iterate]] cut per hop.
     */
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
       maxHops: Int = 10, srcCol: String = "src", dstCol: String = "dst",
@@ -481,38 +446,25 @@ object Graphs {
     val e = canonicalEdges(edges, srcCol, dstCol)
     val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .transform(persistTracked)
-    var dist = landmarks.select(col(nodeCol).cast("long").as("lm"))
+    val lms = landmarks.select(col(nodeCol).cast("long").as("lm"))
       .distinct()
-      .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"))
-      .transform(persistTracked)
     // the visited state is k x n rows — k must be a BOUNDED landmark
     // set (the whole point of the landmark heuristic); fail loudly on
-    // a mis-sized call instead of materializing an n x n table. The
-    // count materializes the persisted seed state the loop needs
-    // anyway, so the guard adds no extra lineage evaluation.
-    require(dist.count() <= maxLandmarks,
+    // a mis-sized call instead of materializing an n x n table
+    require(lms.count() <= maxLandmarks,
       s"landmarkDistances: more than $maxLandmarks landmarks - the " +
         "visited state is k x n; pick a small fixed landmark set or " +
         "raise maxLandmarks deliberately")
-    var frontier = dist
     var hop = 0L
-    var done = maxHops == 0 || frontier.isEmpty
-    while (!done) {
+    Lineage.iterate(lms.select(col("lm"), col("lm").as("node"),
+        lit(0L).as("dist")), maxHops) { dist =>
       hop += 1L
-      val next = frontier
-        .join(adj, frontier("node") === adj("u"))
+      val reached = dist.filter(col("dist") === hop - 1L)
+        .join(adj, col("node") === col("u"))
         .select(col("lm"), col("v").as("node")).distinct()
-        .join(dist, Seq("lm", "node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .transform(persistTracked)
-      done = next.isEmpty
-      if (!done) {
-        dist = dist.unionAll(next).transform(persistTracked)
-        frontier = next
-        done = hop >= maxHops
-      }
-    }
-    dist
+      dist.join(reached, Seq("lm", "node"), "full_outer")
+        .select(col("lm"), col("node"), coalesce(col("dist"), lit(hop)).as("dist"))
+    }((prev, next) => next.rows == prev.rows)
   }
 
   /** Landmark-approximated harmonic centrality (the k-sweep landmark
@@ -545,9 +497,9 @@ object Graphs {
     * Scale shape per round: one adjacency aggregate (sorted neighbor
     * arrays), two hash joins back onto the edge set, support via the
     * codegen'd sorted-merge intersect (the [[triangleCounts]]
-    * kernel), one filter; `localCheckpoint` lineage cut + a scalar
-    * driver count as the convergence probe. Rounds are bounded by the
-    * peeling depth (≤ max support), typically O(log m) in practice.
+    * kernel), one filter; a [[Lineage.iterate]] cut whose row count
+    * is the convergence probe. Rounds are bounded by the peeling
+    * depth (≤ max support), typically O(log m) in practice.
     */
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "src",
       dstCol: String = "dst", maxIter: Int = 50): DataFrame = {
@@ -567,19 +519,11 @@ object Graphs {
             .sorted_intersect(col("un"), col("vn")))
             .cast("long").as("support"))
     }
-    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    var m = e.count()
-    var done = k == 2 || m == 0L // every graph is its own 2-truss
-    var iter = 0
-    while (!done && iter < maxIter) {
-      iter += 1
-      val kept = withSupport(e).filter(col("support") >= k - 2)
-        .select("u", "v").localCheckpoint()
-      val mNext = kept.count()
-      done = mNext == m || mNext == 0L
-      m = mNext
-      e = kept
-    }
+    // every graph is its own 2-truss
+    val e = Lineage.iterate(canonicalEdges(edges, srcCol, dstCol),
+        if (k == 2) 0 else maxIter) { e =>
+      withSupport(e).filter(col("support") >= k - 2).select("u", "v")
+    }((prev, next) => next.rows == prev.rows || next.rows == 0L)
     withSupport(e)
   }
 
@@ -592,17 +536,18 @@ object Graphs {
     *
     * Scale shape: state is one (node, score) row per node; each
     * half-iteration is one edge⋈state shuffle + a hash aggregate +
-    * a broadcast 1-row normalizer; `localCheckpoint` lineage cuts
-    * per round (the [[personalizedPageRank]] idiom).
+    * a broadcast 1-row normalizer. The loop carries two frames, so it
+    * drives itself: each half-iteration's score table is cut with
+    * [[Lineage.cut]] and the one it replaces released.
     */
   def hits(edges: DataFrame, iters: Int = 10, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+    val e = Lineage.cut(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).distinct())
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct())
     var hub = nodes.select(col("node"), lit(1.0).as("h"))
     var auth = nodes.select(col("node"), lit(0.0).as("a"))
     for (_ <- 1 to iters) {
@@ -610,16 +555,18 @@ object Graphs {
         .groupBy(col("dst").as("node")).agg(sum("h").as("a"))
       val aFull = nodes.join(aRaw, Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0.0)).as("a"))
-      auth = aFull.crossJoin(broadcast(aFull.agg(sum("a").as("s"))))
-        .select(col("node"), (col("a") / col("s")).as("a"))
-        .localCheckpoint()
+      val nextAuth = Lineage.cut(aFull.crossJoin(broadcast(aFull.agg(sum("a").as("s"))))
+        .select(col("node"), (col("a") / col("s")).as("a")))
+      Lineage.release(auth)
+      auth = nextAuth
       val hRaw = e.join(auth.select(col("node").as("dst"), col("a")), "dst")
         .groupBy(col("src").as("node")).agg(sum("a").as("h"))
       val hFull = nodes.join(hRaw, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0.0)).as("h"))
-      hub = hFull.crossJoin(broadcast(hFull.agg(sum("h").as("s"))))
-        .select(col("node"), (col("h") / col("s")).as("h"))
-        .localCheckpoint()
+      val nextHub = Lineage.cut(hFull.crossJoin(broadcast(hFull.agg(sum("h").as("s"))))
+        .select(col("node"), (col("h") / col("s")).as("h")))
+      Lineage.release(hub)
+      hub = nextHub
     }
     nodes.join(auth, Seq("node")).join(hub, Seq("node"))
       .select(col("node"), col("a").as("authority"), col("h").as("hub"))

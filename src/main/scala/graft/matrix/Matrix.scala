@@ -3,6 +3,7 @@ package graft.matrix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Lineage
 
 /** Sparse linear algebra over COO triples — rebuild of the reference's
   * matrix library (mathematics/Matrix.scala:33-993) on DataFrames.
@@ -406,7 +407,7 @@ final case class Matrix(df: DataFrame) {
     * aggregate read at the submitter (the convergence scalar — the
     * reference's `Job.next` idiom, reference `examples/PageRank
     * .scala:54-81`). Deterministic: starts from the all-ones vector;
-    * per-iteration lineage cuts keep the plan flat. Returns
+    * a [[Lineage.iterate]] cut per iteration keeps the plan flat. Returns
     * (col, weight) unit-normalized, plus the Rayleigh estimate of the
     * top singular value σ₁ = √λ₁.
     *
@@ -418,11 +419,9 @@ final case class Matrix(df: DataFrame) {
     require(iters >= 1, "iters must be >= 1")
     val spark = df.sparkSession
     val at = transpose
-    var v = df.select(col(C).as(R)).distinct()
-      .withColumn(V, lit(1.0)).localCheckpoint()
+    val v0 = df.select(col(C).as(R)).distinct().withColumn(V, lit(1.0))
     var lambda = 0.0
-    var i = 0
-    while (i < iters) {
+    val v = Lineage.iterate(v0, iters) { v =>
       // w = A v (row space; propagate of the TRANSPOSE maps the
       // column-indexed v through the edges), then u = Aᵀ w = (AᵀA) v
       val w = at.propagate(v.select(col(R), col(V)))
@@ -431,9 +430,8 @@ final case class Matrix(df: DataFrame) {
         u.agg(sum(col(V) * col(V))).head().getDouble(0))
       require(norm > 0, "matrix annihilated the iterate (rank issue)")
       lambda = norm
-      v = u.select(col(R), (col(V) / norm).as(V)).localCheckpoint()
-      i += 1
-    }
+      u.select(col(R), (col(V) / norm).as(V))
+    }((_, _) => false)
     (v.select(col(R).as(C), col(V).as("weight")), math.sqrt(lambda))
   }
 

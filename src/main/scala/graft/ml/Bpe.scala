@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 /** Distributed BPE (byte-pair-encoding) vocabulary induction — the
   * tokenizer-training step of a pretraining pipeline.
@@ -129,10 +130,9 @@ object Bpe {
     *    its step.
     *
     * Each round is one partial/final aggregation over the vocabulary
-    * plus one map to apply the whole batch; lineage is truncated by an
-    * eager localCheckpoint per round (the reference's iterative-job
-    * idiom, Job.next / examples/PageRank.scala:54-81, as a driver
-    * loop).
+    * plus one map to apply the whole batch; lineage is truncated by a
+    * [[Lineage.cut]] per round (the reference's iterative-job idiom,
+    * Job.next / examples/PageRank.scala:54-81, as a driver loop).
     */
   def trainFromCounts(spark: SparkSession, words: Dataset[(String, Long)],
       nMerges: Int, batchCap: Int = 64,
@@ -228,14 +228,14 @@ object Bpe {
     import spark.implicits._
     require(batchCap >= 1, s"batchCap must be >= 1, got $batchCap")
 
-    // eager localCheckpoint: truncates the LOGICAL plan each round,
-    // not just caches it — persist()+count() leaves the lineage
-    // growing one map per round, and at a few hundred rounds the
-    // accumulated tree OOMs Spark's own plan rendering (AQE explains
-    // the plan on every update). Same idiom as TrainingDataJob.cut.
-    var symbols: Dataset[(Array[String], Long)] = words
-      .map { case (w, c) => (charSymbols(w), c) }
-      .localCheckpoint()
+    // the cut truncates the LOGICAL plan each round, not just caches
+    // it — persist()+count() leaves the lineage growing one map per
+    // round, and at a few hundred rounds the accumulated tree OOMs
+    // Spark's own plan rendering (AQE explains the plan on every
+    // update). The merge table is driver state, so the loop drives
+    // itself and releases each superseded round.
+    var symbols: Dataset[(Array[String], Long)] = Lineage.cut(words
+      .map { case (w, c) => (charSymbols(w), c) })
 
     // the vocabulary's symbol strings: initial alphabet ∪ minted
     // merges — consulted for the convergent-path batch guard
@@ -274,14 +274,13 @@ object Bpe {
           .map { case (l, ms) =>
             l -> ms.map { case (_, r, _) => r -> (l + r) }.toMap
           }
-        val next = symbols
-          .map { case (syms, c) => (applyMerges(syms, byLeft), c) }
-          .localCheckpoint()
-        symbols.unpersist(blocking = false)
+        val next = Lineage.cut(symbols
+          .map { case (syms, c) => (applyMerges(syms, byLeft), c) })
+        Lineage.release(symbols)
         symbols = next
       }
     }
-    symbols.unpersist(blocking = false)
+    Lineage.release(symbols)
     merges.toSeq
   }
 

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 /** Isotonic (monotone) calibration of classifier scores — the step
   * between a trained ranker ([[QualityModel]]/[[Softmax]]) and a
@@ -133,8 +134,8 @@ object Calibrate {
     *
     * Appends `calibrated`. Scale shape: per step one 2-double
     * aggregate over the scored table with the 1-row parameter state
-    * broadcast back (the QualityModel trainer shape);
-    * `localCheckpoint` lineage cut per step.
+    * broadcast back (the QualityModel trainer shape); one
+    * [[Lineage.iterate]] cut per step.
     */
   def plattScale(scored: DataFrame, scoreCol: String, labelCol: String,
       iters: Int = 8, lr: Double = 2.0): DataFrame = {
@@ -143,18 +144,17 @@ object Calibrate {
       .withColumn("__s", col(scoreCol).cast("double"))
       .withColumn("__y", col(labelCol).cast("double"))
     def sig(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
-    var ab = base.sparkSession.range(1)
+    val ab0 = base.sparkSession.range(1)
       .select(lit(0.0).as("a"), lit(0.0).as("b"))
-    for (_ <- 1 to iters) {
+    val ab = Lineage.iterate(ab0, iters) { ab =>
       val z = sig(col("a") * col("__s") + col("b"))
       val g = base.crossJoin(broadcast(ab))
         .agg((sum((z - col("__y")) * col("__s")) / count(lit(1))).as("da"),
           (sum(z - col("__y")) / count(lit(1))).as("db"))
-      ab = ab.crossJoin(broadcast(g))
+      ab.crossJoin(broadcast(g))
         .select((col("a") - lit(lr) * col("da")).as("a"),
           (col("b") - lit(lr) * col("db")).as("b"))
-        .localCheckpoint()
-    }
+    }((_, _) => false)
     base.crossJoin(broadcast(ab))
       .withColumn("calibrated", sig(col("a") * col("__s") + col("b")))
       .drop("__s", "__y", "a", "b")

@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.Lineage
+
 import graft.core.PipelineCaches.persistTracked
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -282,23 +284,6 @@ object Dedup {
     verifyJaccard(candidates, allSigs.select("id", "sh"), threshold)
   }
 
-  /** Connected components over near-duplicate pairs — the clustering
-    * step that turns pairwise matches into dedup groups. Returns
-    * (id, component) where component = the minimum id reachable from
-    * `id` (the canonical representative).
-    *
-    * Algorithm: iterative min-label propagation with pointer jumping —
-    * each round every node takes the min of its own label, its
-    * neighbors' labels, and its label's label (path halving), so
-    * convergence is O(log diameter) rounds rather than O(diameter).
-    * Each round is two shuffles (a neighbor-min groupBy and a label
-    * join); iteration stops at fixpoint, checked with a driver-side
-    * count (the reference's `readAtSubmitter` convergence idiom,
-    * Source.scala:190-194). Near-dup components are overwhelmingly
-    * tiny (pairs and small chains), so rounds ≈ 2-3 in practice; the
-    * same loop scales to web-graph-sized inputs where Kiveris et
-    * al.'s large/small-star is the published alternative.
-    */
   /** Exact-duplicate savings report: one row of the numbers an ops
     * review asks after a dedup pass — total docs, docs carrying a
     * duplicated fingerprint, duplicate GROUPS, redundant copies
@@ -340,17 +325,33 @@ object Dedup {
       .groupBy("size").agg(count(lit(1)).as("n_groups"))
       .orderBy("size")
 
+  /** Connected components over near-duplicate pairs — the clustering
+    * step that turns pairwise matches into dedup groups. Returns
+    * (id, component) where component = the minimum id reachable from
+    * `id` (the canonical representative).
+    *
+    * Algorithm: iterative min-label propagation with pointer jumping —
+    * each round every node takes the min of its own label, its
+    * neighbors' labels, and its label's label (path halving), so
+    * convergence is O(log diameter) rounds rather than O(diameter).
+    * Each round is two shuffles (a neighbor-min groupBy and a label
+    * join) and one [[Lineage.iterate]] cut; iteration stops at
+    * fixpoint, checked with a driver-side emptiness probe of the
+    * changed labels (the reference's `readAtSubmitter` convergence
+    * idiom, Source.scala:190-194). Near-dup components are
+    * overwhelmingly tiny (pairs and small chains), so rounds ≈ 2-3 in
+    * practice; the same loop scales to web-graph-sized inputs where
+    * Kiveris et al.'s large/small-star is the published alternative.
+    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val edges = pairs
       .select(col("id1").cast("long").as("src"), col("id2").cast("long").as("dst"))
     val undirected = edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .transform(persistTracked)
-    var labels = undirected.select(col("src").as("id")).distinct()
+    val labels0 = undirected.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val labels = Lineage.iterate(labels0, maxIter) { labels =>
       // min label among each node's neighbors
       val nbrMin = undirected
         .join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
@@ -358,19 +359,14 @@ object Dedup {
         .select(col("src").as("id"), col("nbr"))
       // path-halving: also look up the label of my label
       val hop = labels.select(col("id").as("label"), col("label").as("ll"))
-      val next = labels
+      labels
         .join(nbrMin, Seq("id"), "left")
         .join(hop, Seq("label"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr"), col("label")),
-            coalesce(col("ll"), col("label"))).as("next_label"),
-          col("label"))
-      val nextLabels = next.select(col("id"), col("next_label").as("label"))
-        .transform(persistTracked)
-      converged = next.filter(col("next_label") =!= col("label")).isEmpty
-      labels = nextLabels
-      i += 1
-    }
+            coalesce(col("ll"), col("label"))).as("label"))
+    }((prev, next) => next.ds.join(prev.ds.withColumnRenamed("label", "prev"), "id")
+      .filter(col("label") =!= col("prev")).isEmpty)
     labels.select(col("id"), col("label").as("component"))
   }
 
@@ -393,12 +389,14 @@ object Dedup {
     *    collapses onto its minimum.
     *
     * Each round is two groupBy+join passes over the current edge set.
-    * Convergence = edge-set fixpoint, detected with a driver-side
-    * (count, xor-of-hashes) signature — exact up to 64-bit collision,
-    * one cheap aggregate instead of a full `except` anti-join per
-    * round. Returns (id, component) with component = the component's
-    * minimum node id, for every node appearing in `pairs` — the same
-    * contract as [[connectedComponents]].
+    * Convergence = edge-set fixpoint, detected with a (count,
+    * sum-of-hashes) signature — exact up to 64-bit collision. The
+    * count is the [[Lineage.iterate]] cut's own; the hash aggregate
+    * runs only in a round whose edge count did not change, instead of
+    * a full `except` anti-join per round. Returns (id, component) with
+    * component = the component's minimum node id, for every node
+    * appearing in `pairs` — the same contract as
+    * [[connectedComponents]].
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val raw = pairs
@@ -408,19 +406,14 @@ object Dedup {
     val nodes = raw.select(col("src").as("id"))
       .unionByName(raw.select(col("dst").as("id"))).distinct()
       .transform(persistTracked)
-    var edges = raw
+    val edges0 = raw
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct().transform(persistTracked)
-    def sigOf(df: DataFrame): (Long, Long) = {
-      val row = df.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    var lastSig = sigOf(edges)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+      .distinct()
+    def hashSum(df: DataFrame): Long =
+      df.agg(coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)))
+        .head().getLong(0)
+    val edges = Lineage.iterate(edges0, maxIter) { edges =>
       // large-star: group the undirected neighborhood of u, link every
       // strictly-larger neighbor to m = min(N(u) ∪ {u})
       val und = edges
@@ -439,16 +432,11 @@ object Dedup {
           least(col("src"), col("dst")).as("v"))
         .distinct()
       val smallMin = oriented.groupBy("u").agg(min("v").as("m"))
-      edges = oriented.join(smallMin, "u")
+      oriented.join(smallMin, "u")
         .select(when(col("v") === col("m"), col("u")).otherwise(col("v")).as("src"),
           col("m").as("dst"))
         .distinct()
-        .transform(persistTracked)
-      val sig = sigOf(edges)
-      converged = sig == lastSig
-      lastSig = sig
-      i += 1
-    }
+    }((prev, next) => next.rows == prev.rows && hashSum(next.ds) == hashSum(prev.ds))
     // fixpoint edges form min-rooted stars: every non-root points at
     // its component minimum; roots appear only on the dst side
     nodes

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 /** Unsupervised keyword extraction — the corpus-curation primitives
   * for topic tagging, domain profiling, and prompt-mining over a
@@ -131,12 +132,10 @@ object Keywords {
         struct(col("v").as("u"), col("u").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).cast("double").as("w"))
-    // tracked pipeline caches (NOT localCheckpoint, which leaves
-    // untracked resident RDDs behind — the bench-hygiene rule): the
-    // vocab and transition tables are read by every iteration's join,
-    // the single final action then evaluates one 10-join DAG over the
-    // two cached inputs. Caller drops the caches via
-    // PipelineCaches.unpersistAll once the result is consumed.
+    // tracked pipeline caches: the vocab and transition tables are read
+    // by every iteration's join. Caller drops the caches (and the
+    // iterate's cut) via PipelineCaches.unpersistAll once the result is
+    // consumed.
     val vocab = graft.core.PipelineCaches.persistTracked(
       docs.select(explode(col("ws")).as("word")).distinct())
     val n = vocab.count()
@@ -146,35 +145,29 @@ object Keywords {
         .select(col("u"), col("v"), (col("w") / col("wd")).as("t")))
     val base = 1.0 / n
     val floor = (1.0 - damping) / n
-    var pr = vocab.select(col("word"), lit(base).as("score"))
-    // the |V|-sized rank vector and mass table must carry a join hint
-    // every iteration — the truncated iterate is a LogicalRDD with
-    // default (maximal) size stats, so without one Spark broadcast the
-    // EDGE table into this join and sort-merged the vocab join. Below
-    // the vocab-count gate (n is already measured) broadcast is the
-    // cheapest; above it a broadcast of a Heaps-law vocabulary
-    // (10^8-10^9 words at corpus scale) would blow the 8 GB broadcast
-    // ceiling and the driver, so fall to a shuffled-hash join with the
-    // rank vector as the build side — same results, all-exchange plan.
+    val pr0 = vocab.select(col("word"), lit(base).as("score"))
+    // the |V|-sized rank vector and mass table carry an explicit join
+    // strategy every iteration, picked from the measured vocab count.
+    // Below the gate broadcast is the cheapest; above it a broadcast
+    // of a Heaps-law vocabulary (10^8-10^9 words at corpus scale)
+    // would blow the 8 GB broadcast ceiling and the driver, so fall to
+    // a shuffled-hash join with the rank vector as the build side —
+    // same results, all-exchange plan.
     def vecHint(d: DataFrame): DataFrame =
       if (n <= broadcastMaxVocab) broadcast(d) else d.hint("shuffle_hash")
-    (1 to iters).foreach { i =>
+    // each iterate is cut (its LOGICAL plan truncated): a lazily-
+    // composed 10-join DAG benched 7.4 s and a persist+count (plan
+    // still grows) 16.5 s vs ~4 s with real per-iteration truncation —
+    // Catalyst re-analysis of the growing chain, not execution, is the
+    // cost
+    Lineage.iterate(pr0, iters) { pr =>
       val inbound = trans.join(vecHint(pr), trans("u") === pr("word"))
         .groupBy(col("v").as("word"))
         .agg(sum(col("t") * col("score")).as("mass"))
-      pr = vocab.join(vecHint(inbound), Seq("word"), "left")
+      vocab.join(vecHint(inbound), Seq("word"), "left")
         .select(col("word"),
           (lit(floor) + lit(damping) * coalesce(col("mass"), lit(0.0)))
             .as("score"))
-      // truncate the iterate's LOGICAL plan (tracked localCheckpoint
-      // analogue): a lazily-composed 10-join DAG benched 7.4 s and a
-      // persist+count (plan still grows) 16.5 s vs ~4 s with real
-      // per-iteration truncation — Catalyst re-analysis of the
-      // growing chain, not execution, is the cost
-      if (i < iters) {
-        pr = org.apache.spark.sql.graft.Lineage.truncateTracked(pr)
-      }
-    }
-    pr
+    }((_, _) => false)
   }
 }

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Lineage
 
 /** Pairwise-preference rating — the aggregation step of a
   * preference-data pipeline (RLHF-style comparison datasets, ranker
@@ -99,20 +100,22 @@ object Preference {
       col(loserCol).cast("string").as("l"), cnt.as("c"))
     // symmetric matches-played table: n_ij keyed by (a, b) AND (b, a),
     // so the denominator is one join-aggregate per side
-    val pairs = m.select(col("w").as("a"), col("l").as("b"), col("c"))
-      .unionAll(m.select(col("l").as("a"), col("w").as("b"), col("c")))
-      .groupBy("a", "b").agg(sum("c").as("n"))
-      .localCheckpoint() // reused every round — cut lineage once
-    val wins = pairs.groupBy(col("a").as("item"))
+    val pairs = Lineage.cut( // reused every round — cut lineage once
+      m.select(col("w").as("a"), col("l").as("b"), col("c"))
+        .unionAll(m.select(col("l").as("a"), col("w").as("b"), col("c")))
+        .groupBy("a", "b").agg(sum("c").as("n")))
+    val wins = Lineage.cut(pairs.groupBy(col("a").as("item"))
       .agg(sum(lit(1)).as("__ig")) // item universe (≥1 match each)
       .join(m.groupBy(col("w").as("item")).agg(sum("c").as("wins")),
         Seq("item"), "left")
-      .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"))
-      .localCheckpoint()
+      .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins")))
     val matchCounts = pairs.groupBy(col("a").as("item"))
       .agg(sum("n").as("matches"))
-    var theta = wins.select(col("item"), lit(1.0).as("th"))
-    for (_ <- 1 to iters) {
+    // a cut per round (the personalizedPageRank idiom) — the
+    // 10-iteration plan otherwise nests past what Catalyst analysis
+    // tolerates, and at scale re-derives every prior round
+    val theta0 = wins.select(col("item"), lit(1.0).as("th"))
+    val theta = Lineage.iterate(theta0, iters) { theta =>
       val denom = pairs
         .join(theta.select(col("item").as("a"), col("th").as("tha")), "a")
         .join(theta.select(col("item").as("b"), col("th").as("thb")), "b")
@@ -123,13 +126,9 @@ object Preference {
         .select(col("item"),
           (col("wins").cast("double") / col("den")).as("t"))
       val total = unnorm.agg(sum("t").as("s"))
-      // lineage cut per round (the personalizedPageRank idiom) — the
-      // 10-iteration plan otherwise nests past what Catalyst analysis
-      // tolerates, and at scale re-derives every prior round
-      theta = unnorm.crossJoin(total)
+      unnorm.crossJoin(total)
         .select(col("item"), (col("t") / col("s")).as("th"))
-        .localCheckpoint()
-    }
+    }((_, _) => false)
     wins.join(matchCounts, "item").join(theta, "item")
       .select(col("item"), col("wins"), col("matches"),
         col("th").as("rating"))

@@ -1,29 +1,76 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.classic
+import org.apache.spark.sql.{Dataset, classic}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
-/** Tracked lineage truncation: `localCheckpoint`'s plan cut without
-  * its cache leak. Iterative DataFrame algorithms (PageRank-style
-  * loops) need each iterate's LOGICAL plan truncated — Catalyst
-  * re-analyzes the whole growing chain per iteration otherwise — but
-  * `localCheckpoint` persists an RDD that `Dataset.unpersist` cannot
-  * reach, so every loop leaves untracked resident blocks behind (the
-  * bench-hygiene failure class). This helper materializes the rows
-  * into an explicitly-persisted InternalRow RDD, registers it with
-  * [[graft.core.PipelineCaches]] for the standard end-of-pipeline
-  * drop, and returns a DataFrame whose plan is just the RDD scan.
+import graft.core.PipelineCaches
+
+/** The one lineage cut and the one loop driver. Iterative DataFrame
+  * algorithms need each iterate's LOGICAL plan truncated — Catalyst
+  * re-analyzes the whole growing chain every round otherwise, and a
+  * `persist` caches rows but keeps the plan. `localCheckpoint` cuts
+  * the plan but pins an RDD that neither `Dataset.unpersist` nor
+  * [[graft.core.PipelineCaches.unpersistAll]] can reach.
+  *
+  * [[cut]] builds the plan `Dataset.localCheckpoint` builds — a
+  * [[LogicalRDD]] made by `LogicalRDD.fromDataset`, so the cut keeps
+  * the source's statistics, partitioning, ordering and constraints —
+  * over an RDD persisted at MEMORY_AND_DISK and registered with
+  * PipelineCaches, so the standard end-of-pipeline drop frees it.
+  * After a drop, re-running a plan over a cut recomputes it from the
+  * RDD's lineage.
   */
 object Lineage {
 
-  def truncateTracked(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    // rows must be copied out of the unsafe buffer before caching
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    _root_.graft.core.PipelineCaches.trackRdd(rdd)
-    rdd.count() // eager, like localCheckpoint(eager = true)
-    spark.internalCreateDataFrame(rdd, df.schema)
+  /** A materialized cut and the row count its materialization took. */
+  final case class Cut[T](ds: Dataset[T], rows: Long)
+
+  /** Materialize `ds` eagerly (one job) and return it with its plan
+    * cut to a scan of the tracked rows.
+    */
+  def cut[T](ds: Dataset[T]): Dataset[T] = counted(ds).ds
+
+  /** Free a frame returned by [[cut]] now rather than at the next
+    * [[graft.core.PipelineCaches.unpersistAll]]; a no-op on any other
+    * frame.
+    */
+  def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
+    case r: LogicalRDD => PipelineCaches.releaseRdd(r.rdd)
+    case _ =>
+  }
+
+  /** The driver loop (Scalding's `Job.next` recursion): cut `init`,
+    * then up to `maxIter` times cut `step` of the current iterate and
+    * stop once `done(previous, next)` holds. Each iterate is released
+    * as soon as its successor is materialized, so a loop of any length
+    * holds one iterate; the returned last one stays tracked.
+    */
+  def iterate[T](init: Dataset[T], maxIter: Int)(step: Dataset[T] => Dataset[T])
+      (done: (Cut[T], Cut[T]) => Boolean): Dataset[T] = {
+    var cur = counted(init)
+    var stop = false
+    var i = 0
+    while (!stop && i < maxIter) {
+      val next = counted(step(cur.ds))
+      stop = done(cur, next)
+      release(cur.ds)
+      cur = next
+      i += 1
+    }
+    cur.ds
+  }
+
+  private def counted[T](ds: Dataset[T]): Cut[T] = {
+    val d = ds.asInstanceOf[classic.Dataset[T]]
+    SQLExecution.withNewExecutionId(d.queryExecution, Some("Lineage.cut")) {
+      // rows must be copied out of the unsafe buffer before caching
+      val rdd = d.queryExecution.toRdd.map(_.copy())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      PipelineCaches.trackRdd(rdd)
+      val rows = rdd.count()
+      Cut(classic.Dataset(d.sparkSession,
+        LogicalRDD.fromDataset(rdd, d, d.isStreaming))(d.encoder), rows)
+    }
   }
 }

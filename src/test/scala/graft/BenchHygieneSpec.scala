@@ -15,9 +15,9 @@ package graft
   * The check is a per-query DELTA of `sc.getPersistentRDDs`, not
   * global emptiness: the suite shares one SparkSession with every
   * other spec, and earlier suites legitimately leave session-lifetime
-  * residents (e.g. `localCheckpoint` blocks) that are not this
-  * spec's business. In Bench's own JVM the session starts clean, so
-  * delta-clean there IS globally clean.
+  * residents (e.g. the untracked `persist` behind `forceToDisk`) that
+  * are not this spec's business. In Bench's own JVM the session starts
+  * clean, so delta-clean there IS globally clean.
   */
 class BenchHygieneSpec extends SparkSpec {
 
