@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Session-level registry of pipeline-internal persists. Multi-pass
   * operators (self-joins of derived inputs, LSH discover+verify,
@@ -13,43 +13,18 @@ object PipelineCaches {
 
   private val tracked =
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-  private val trackedRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
   private val clearHooks =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  /** Track a directly-persisted RDD (the lineage cut —
-    * [[org.apache.spark.sql.graft.Lineage.cut]] — persists at the RDD
-    * level where Dataset.unpersist can't reach).
-    */
-  def trackRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    trackedRdds.add(rdd)
-
-  /** Unpersist one tracked RDD now and stop tracking it. */
-  def releaseRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    trackedRdds.remove(rdd)
-    rdd.unpersist(blocking = false)
-  }
-
-  def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    tracked.add(p)
-    p
-  }
-
-  /** Typed variant — multi-pass kernels (IVF training + list build)
-    * cache the decoded Dataset so each Lloyd iteration and the list
-    * scan read memory, not parquet.
-    */
-  def persistTrackedDs[T](ds: Dataset[T]): Dataset[T] = {
+  /** Persist a frame (typed or not) until [[unpersistAll]]. */
+  def persistTracked[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.persist()
     tracked.add(p)
     p
   }
 
   /** Register a callback run by [[unpersistAll]] — for operator-local
-    * memo tables (e.g. trained centroids) that must not outlive the
+    * state (trained centroids, lineage cuts) that must not outlive the
     * pipeline's cache scope.
     */
   def onClear(hook: () => Unit): Unit = clearHooks.add(hook)
@@ -62,11 +37,6 @@ object PipelineCaches {
     while (df != null) {
       df.unpersist(blocking = false)
       df = tracked.poll()
-    }
-    var rdd = trackedRdds.poll()
-    while (rdd != null) {
-      rdd.unpersist(blocking = false)
-      rdd = trackedRdds.poll()
     }
     clearHooks.forEach(h => h())
   }

@@ -91,7 +91,7 @@ object EmbeddingIndexJob {
       whiten: Boolean = false): Result = {
     val spark = vecs0.sparkSession
     import spark.implicits._
-    val raw = graft.core.PipelineCaches.persistTrackedDs(
+    val raw = graft.core.PipelineCaches.persistTracked(
       vecs0.select(col("id"), col("vec")).as[(Long, Array[Float])]).toDF("id", "vec")
 
     // 1. exact dedup on the RAW vector bytes (lowest id wins) —
@@ -116,7 +116,7 @@ object EmbeddingIndexJob {
     val afterExact = pcaModel match {
       case None => afterExactRaw
       case Some(mdl) =>
-        graft.core.PipelineCaches.persistTrackedDs(
+        graft.core.PipelineCaches.persistTracked(
           Pca.project(afterExactRaw, "id", "vec", mdl, whiten)
             .select(col("id"),
               transform(col("proj"), x => x.cast("float")).as("vec"))
@@ -128,7 +128,7 @@ object EmbeddingIndexJob {
     val losers = Similarity.cosineNearDuplicates(afterExact, dupCos,
         dim = if (pcaK > 0) pcaK else rawDim)
       .select(col("id2").as("id")).distinct()
-    val deduped = graft.core.PipelineCaches.persistTrackedDs(
+    val deduped = graft.core.PipelineCaches.persistTracked(
       afterExact.join(losers, Seq("id"), "left_anti")
         .as[(Long, Array[Float])]).toDF("id", "vec")
 

@@ -175,10 +175,11 @@ object TrainingDataJob {
     * iterative idiom restarts lineage every step (reference
     * `examples/PageRank.scala:54-81`). The cut also caches the stage
     * output, so the two-consumer stages below (train/holdout split,
-    * fluency self-join) compute their input once. A lost cut block is
-    * recomputed from its RDD lineage, so executor loss costs a
-    * recompute, not the run; [[PipelineCaches.unpersistAll]] frees
-    * the cuts once the outputs are written.
+    * fluency self-join) compute their input once. Like
+    * `localCheckpoint`, a resident cut keeps no RDD lineage, so a lost
+    * cut block fails the job (MEMORY_AND_DISK spills rather than
+    * drops); [[PipelineCaches.unpersistAll]] frees the cuts once the
+    * outputs are written.
     */
   def assemble(docs: DataFrame, lang: String, minQuality: Double,
       jaccard: Double, holdout: Double, budget: Long, ctxLen: Int,

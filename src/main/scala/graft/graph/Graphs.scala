@@ -446,18 +446,18 @@ object Graphs {
     val e = canonicalEdges(edges, srcCol, dstCol)
     val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .transform(persistTracked)
-    val lms = landmarks.select(col(nodeCol).cast("long").as("lm"))
-      .distinct()
+    val seed = Lineage.cut(landmarks.select(col(nodeCol).cast("long").as("lm"))
+      .distinct().select(col("lm"), col("lm").as("node"), lit(0L).as("dist")))
     // the visited state is k x n rows — k must be a BOUNDED landmark
     // set (the whole point of the landmark heuristic); fail loudly on
-    // a mis-sized call instead of materializing an n x n table
-    require(lms.count() <= maxLandmarks,
+    // a mis-sized call instead of materializing an n x n table. The
+    // seed's count is the cut's own, and the loop starts from it.
+    require(Lineage.rows(seed) <= maxLandmarks,
       s"landmarkDistances: more than $maxLandmarks landmarks - the " +
         "visited state is k x n; pick a small fixed landmark set or " +
         "raise maxLandmarks deliberately")
     var hop = 0L
-    Lineage.iterate(lms.select(col("lm"), col("lm").as("node"),
-        lit(0L).as("dist")), maxHops) { dist =>
+    Lineage.iterate(seed, maxHops) { dist =>
       hop += 1L
       val reached = dist.filter(col("dist") === hop - 1L)
         .join(adj, col("node") === col("u"))

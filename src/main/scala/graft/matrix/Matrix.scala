@@ -417,7 +417,6 @@ final case class Matrix(df: DataFrame) {
     */
   def topSingularVector(iters: Int = 20): (DataFrame, Double) = {
     require(iters >= 1, "iters must be >= 1")
-    val spark = df.sparkSession
     val at = transpose
     val v0 = df.select(col(C).as(R)).distinct().withColumn(V, lit(1.0))
     var lambda = 0.0

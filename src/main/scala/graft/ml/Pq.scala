@@ -219,7 +219,7 @@ object Pq {
       rerank: Int = 0): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusVecs = graft.core.PipelineCaches.persistTrackedDs(
+    val corpusVecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cb = train(corpusVecs.toDF("id", "vec"), m, kCodes, seed, iters)
     val qs = queries.select(col("id"), col("vec")).as[(Long, Array[Float])]
@@ -324,7 +324,7 @@ object Pq {
       rerank: Int = 0, softAssign: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusVecs = graft.core.PipelineCaches.persistTrackedDs(
+    val corpusVecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cents = Similarity.trainCentroids(corpusVecs, nCentroids, seed,
       kmeansIters)
@@ -357,7 +357,7 @@ object Pq {
       m, kCodes, seed, iters)
     val bcCb = spark.sparkContext.broadcast(cb)
     // inverted lists: (centroid, cid, residual codes)
-    val lists = graft.core.PipelineCaches.persistTrackedDs(
+    val lists = graft.core.PipelineCaches.persistTracked(
       corpusVecs.flatMap { case (id, v) =>
         nearestCentroids(v, bcCents.value, softAssign).iterator.map { ci =>
           val cv = bcCents.value(ci)._2

@@ -281,7 +281,7 @@ object Similarity {
       kmeansIters: Int = 2, corpusAssign: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusVecs = graft.core.PipelineCaches.persistTrackedDs(
+    val corpusVecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cents = trainCentroids(corpusVecs, nCentroids, seed, kmeansIters)
       .zipWithIndex.map { case (v, i) => (i, v, VecUtil.norm(v)) }
@@ -337,7 +337,7 @@ object Similarity {
       kmeansIters: Int = 2): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val vecs = graft.core.PipelineCaches.persistTrackedDs(
+    val vecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cents = trainCentroids(vecs, nCentroids, seed, kmeansIters)
       .zipWithIndex.map { case (v, i) => (i, v, VecUtil.norm(v)) }
@@ -443,7 +443,7 @@ object Similarity {
       kmeansIters: Int = 2, corpusAssign: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusVecs = graft.core.PipelineCaches.persistTrackedDs(
+    val corpusVecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cents = trainCentroids(corpusVecs, nCentroids, seed, kmeansIters)
       .zipWithIndex.map { case (v, i) => (i, v, VecUtil.norm(v)) }
@@ -558,7 +558,7 @@ object Similarity {
       corpusAssign: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val corpusVecs = graft.core.PipelineCaches.persistTrackedDs(
+    val corpusVecs = graft.core.PipelineCaches.persistTracked(
       corpus.select(col("id"), col("vec")).as[(Long, Array[Float])])
     val cents = trainCentroids(corpusVecs, nCentroids, seed, kmeansIters)
       .zipWithIndex.map { case (v, i) => (i, v, VecUtil.norm(v)) }

@@ -1,76 +1,141 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{Dependency, NarrowDependency, Partition, SparkException, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.PipelineCaches
 
-/** The one lineage cut and the one loop driver. Iterative DataFrame
-  * algorithms need each iterate's LOGICAL plan truncated — Catalyst
-  * re-analyzes the whole growing chain every round otherwise, and a
-  * `persist` caches rows but keeps the plan. `localCheckpoint` cuts
-  * the plan but pins an RDD that neither `Dataset.unpersist` nor
-  * [[graft.core.PipelineCaches.unpersistAll]] can reach.
-  *
-  * [[cut]] builds the plan `Dataset.localCheckpoint` builds — a
-  * [[LogicalRDD]] made by `LogicalRDD.fromDataset`, so the cut keeps
-  * the source's statistics, partitioning, ordering and constraints —
-  * over an RDD persisted at MEMORY_AND_DISK and registered with
-  * PipelineCaches, so the standard end-of-pipeline drop frees it.
-  * After a drop, re-running a plan over a cut recomputes it from the
-  * RDD's lineage.
+/** The one lineage cut and the one loop driver. [[cut]] builds
+  * `Dataset.localCheckpoint`'s plan (`LogicalRDD.fromDataset`: the
+  * source's statistics, partitioning and ordering) over a [[CutRDD]]
+  * that [[graft.core.PipelineCaches.unpersistAll]] frees, which
+  * `localCheckpoint`'s RDD is not. A resident cut has no RDD parent, so
+  * later rounds neither walk nor serialize earlier ones and their
+  * shuffles can be cleaned; a released one rebuilds from its source's
+  * logical plan if run again.
   */
 object Lineage {
+
+  // resident cuts, freed by the pipeline cache drop
+  private val cuts = new java.util.concurrent.ConcurrentLinkedQueue[CutRDD]()
+  PipelineCaches.onClear { () =>
+    Iterator.continually(cuts.poll()).takeWhile(_ != null).foreach(_.unpersist())
+  }
 
   /** A materialized cut and the row count its materialization took. */
   final case class Cut[T](ds: Dataset[T], rows: Long)
 
-  /** Materialize `ds` eagerly (one job) and return it with its plan
-    * cut to a scan of the tracked rows.
+  /** `ds` materialized (one job) under a plan that scans the tracked
+    * rows; a resident cut is returned as is.
     */
   def cut[T](ds: Dataset[T]): Dataset[T] = counted(ds).ds
 
-  /** Free a frame returned by [[cut]] now rather than at the next
-    * [[graft.core.PipelineCaches.unpersistAll]]; a no-op on any other
-    * frame.
-    */
+  /** The row count of `ds`'s cut, free on a frame [[cut]] returned. */
+  def rows(ds: Dataset[_]): Long = counted(ds).rows
+
+  /** Free a frame [[cut]] returned now; a no-op on any other. */
   def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
-    case r: LogicalRDD => PipelineCaches.releaseRdd(r.rdd)
+    case LogicalRDD(_, r: CutRDD, _, _, _, _) => cuts.remove(r); r.unpersist()
     case _ =>
   }
 
   /** The driver loop (Scalding's `Job.next` recursion): cut `init`,
     * then up to `maxIter` times cut `step` of the current iterate and
     * stop once `done(previous, next)` holds. Each iterate is released
-    * as soon as its successor is materialized, so a loop of any length
-    * holds one iterate; the returned last one stays tracked.
+    * once its successor is materialized; the last stays tracked.
     */
   def iterate[T](init: Dataset[T], maxIter: Int)(step: Dataset[T] => Dataset[T])
       (done: (Cut[T], Cut[T]) => Boolean): Dataset[T] = {
-    var cur = counted(init)
-    var stop = false
-    var i = 0
-    while (!stop && i < maxIter) {
-      val next = counted(step(cur.ds))
-      stop = done(cur, next)
-      release(cur.ds)
-      cur = next
-      i += 1
-    }
-    cur.ds
+    @annotation.tailrec def loop(cur: Cut[T], i: Int): Dataset[T] =
+      if (i == maxIter) cur.ds
+      else {
+        val next = counted(step(cur.ds))
+        val stop = done(cur, next)
+        release(cur.ds)
+        if (stop) next.ds else loop(next, i + 1)
+      }
+    loop(counted(init), 0)
   }
 
   private def counted[T](ds: Dataset[T]): Cut[T] = {
     val d = ds.asInstanceOf[classic.Dataset[T]]
-    SQLExecution.withNewExecutionId(d.queryExecution, Some("Lineage.cut")) {
-      // rows must be copied out of the unsafe buffer before caching
-      val rdd = d.queryExecution.toRdd.map(_.copy())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      PipelineCaches.trackRdd(rdd)
-      val rows = rdd.count()
-      Cut(classic.Dataset(d.sparkSession,
-        LogicalRDD.fromDataset(rdd, d, d.isStreaming))(d.encoder), rows)
+    d.queryExecution.analyzed match {
+      case LogicalRDD(_, r: CutRDD, _, _, _, _) if r.resident => Cut(ds, r.rows)
+      case _ =>
+        SQLExecution.withNewExecutionId(d.queryExecution, Some("Lineage.cut")) {
+          val rdd = new CutRDD(d.sparkSession, d.logicalPlan, d.queryExecution.toRdd)
+          cuts.add(rdd.persist(StorageLevel.MEMORY_AND_DISK))
+          rdd.materialize()
+          Cut(classic.Dataset(d.sparkSession,
+            LogicalRDD.fromDataset(rdd, d, d.isStreaming))(d.encoder), rdd.rows)
+        }
     }
   }
 }
+
+/** A cut's rows: counted once over its source's RDD, then read from
+  * its blocks alone; `unpersist` frees them and re-attaches a parent
+  * rebuilt from `plan`. Its partitions never change, as RDDs built over
+  * it keep them.
+  */
+private final class CutRDD(@transient private val session: classic.SparkSession,
+    @transient private val plan: LogicalPlan,
+    @transient private var source: RDD[InternalRow])
+  extends RDD[InternalRow](session.sparkContext, Nil) {
+
+  private val numParts = source.partitions.length
+  @volatile private[graft] var resident = false
+  @transient private[graft] var rows = 0L
+
+  private[graft] def materialize(): Unit = {
+    rows = count()
+    resident = true
+    source = null
+    markCheckpointed() // forget the parent dependency
+  }
+
+  override def unpersist(blocking: Boolean): this.type = {
+    super.unpersist(blocking)
+    if (resident) { resident = false; markCheckpointed() }
+    this
+  }
+
+  override protected def getDependencies: Seq[Dependency[_]] =
+    if (resident) Nil
+    else {
+      if (source == null) {
+        val qe = classic.Dataset.ofRows(session, plan).queryExecution
+        source = SQLExecution.withNewExecutionId(qe, Some("Lineage.cut rebuild"))(qe.toRdd)
+      }
+      List(new CutDependency(source, numParts))
+    }
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate[Partition](numParts)(CutPartition(_))
+
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+    dependencies match {
+      // rows must be copied out of the unsafe buffer before caching
+      case Seq(d: CutDependency) => d.rows(split.index, context).map(_.copy())
+      case _ => throw new SparkException(s"block rdd_${id}_${split.index} of a cut is lost")
+    }
+}
+
+/** Cut partition i reads parent partitions i, i + n, …: one for one
+  * unless adaptive execution, whose plans declare no partitioning,
+  * coalesced a rebuild differently.
+  */
+private final class CutDependency(parent: RDD[InternalRow], n: Int)
+  extends NarrowDependency[InternalRow](parent) {
+  private val parts = parent.partitions
+  override def getParents(i: Int): Seq[Int] = i until parts.length by n
+  def rows(i: Int, context: TaskContext): Iterator[InternalRow] =
+    getParents(i).iterator.flatMap(j => rdd.iterator(parts(j), context))
+}
+
+private final case class CutPartition(index: Int) extends Partition

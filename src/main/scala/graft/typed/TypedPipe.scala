@@ -75,7 +75,7 @@ final class TypedPipe[T](val ds: Dataset[T]) extends Serializable {
       implicit et: Encoder[T]): Dataset[(T, String)] = {
     implicit val ts: Encoder[(T, String)] =
       Encoders.tuple(et, Encoders.STRING)
-    graft.core.PipelineCaches.persistTrackedDs(ds.map { t =>
+    graft.core.PipelineCaches.persistTracked(ds.map { t =>
       scala.util.Try(probe(t)) match {
         case scala.util.Failure(e) =>
           (t, Option(e.getMessage).getOrElse(e.getClass.getName))

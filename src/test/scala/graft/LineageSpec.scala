@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Lineage
 import scala.jdk.CollectionConverters._
@@ -10,8 +13,8 @@ import graft.graph.Graphs
 
 /** The one lineage cut and the one loop driver: a cut keeps the
   * source's statistics, every cut is freed by the pipeline cache drop,
-  * a loop holds one iterate whatever its round count, and no main
-  * source cuts lineage any other way.
+  * a loop holds one iterate and one round of RDD lineage whatever its
+  * round count, and no main source cuts lineage any other way.
   */
 class LineageSpec extends SparkSpec {
 
@@ -20,6 +23,21 @@ class LineageSpec extends SparkSpec {
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** RDDs and shuffle dependencies reachable from a frame's scans. */
+  private def lineageOf(df: DataFrame): (Int, Int) = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    var shuffles = 0
+    def walk(r: RDD[_]): Unit = if (seen.add(r.id)) r.dependencies.foreach { d =>
+      if (d.isInstanceOf[ShuffleDependency[_, _, _]]) shuffles += 1
+      walk(d.rdd)
+    }
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case r: LogicalRDD => walk(r.rdd)
+      case _ =>
+    }
+    (seen.size, shuffles)
+  }
 
   test("a cut keeps the source's optimized size estimate") {
     import spark.implicits._
@@ -31,6 +49,7 @@ class LineageSpec extends SparkSpec {
     assert(want < BigInt(Long.MaxValue))
     assert(got == want)
     assert(rowsOf(c) == rowsOf(src))
+    assert(Lineage.cut(c) eq c, "cutting a resident cut is a no-op")
     PipelineCaches.unpersistAll()
   }
 
@@ -114,23 +133,37 @@ class LineageSpec extends SparkSpec {
     assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
-  test("a loop holds one iterate whatever its round count") {
+  test("a loop holds one iterate and one round of lineage whatever its round count") {
     import spark.implicits._
     val path = (1L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
     val source = Seq(1L).toDF("node")
-    def resident(maxHops: Int): (Int, Long) = {
+    def resident(maxHops: Int): (Int, (Int, Int), Long) = {
       PipelineCaches.unpersistAll()
       val before = persistentIds
-      val far = Graphs.shortestHops(path, source, maxHops = maxHops)
-        .agg(max("dist")).head().getLong(0)
+      val dist = Graphs.shortestHops(path, source, maxHops = maxHops)
+      val far = dist.agg(max("dist")).head().getLong(0)
       val n = (persistentIds -- before).size
+      val lineage = lineageOf(dist)
       PipelineCaches.unpersistAll()
-      (n, far)
+      (n, lineage, far)
     }
-    val (short, shortFar) = resident(3)
-    val (long, longFar) = resident(30)
+    val (short, shortLineage, shortFar) = resident(3)
+    val (long, longLineage, longFar) = resident(30)
     assert(shortFar == 3L && longFar == 29L)
     assert(long == short, s"30-hop run holds $long RDDs, 3-hop run $short")
+    // (RDDs, shuffle dependencies) reachable from the result: a cut
+    // that kept its RDD lineage would reach every round's shuffles
+    assert(longLineage == shortLineage,
+      s"30-hop result reaches $longLineage, 3-hop result $shortLineage")
+  }
+
+  test("a narrow loop of many rounds keeps one round of RDD lineage") {
+    val out = Lineage.iterate(spark.range(0, 8, 1, 2).toDF("id"), 150)(
+      _.select((col("id") + 1).as("id")))((_, _) => false)
+    assert(lineageOf(out) == ((1, 0)))
+    assert(out.agg(sum("id")).head().getLong(0) == (0L until 8L).map(_ + 150L).sum)
+    PipelineCaches.unpersistAll()
+    assert(out.agg(sum("id")).head().getLong(0) == (0L until 8L).map(_ + 150L).sum)
   }
 
   test("no main source cuts lineage outside Lineage") {
