@@ -347,42 +347,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.GraftSession.mainCores
+    val spark = graft.core.GraftSession.forMain()
 
-    val queries = SparkEntry.queries
     // optional comma-separated headline filter for local A/B isolation
     // (the driver always runs the full list)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
     val headline = Bench.headline.filter(n => only.forall(_.contains(n)))
-      .filter(queries.contains)
-    // JVM/codegen warmup on the smallest SF so per-query numbers
-    // measure the engine, not JIT: run every headline query once at
-    // sf0.001 (compiles each plan's generated code cheaply).
+      .filter(SparkEntry.queries.contains)
     // capture BEFORE the warmup pass: load1 must witness the box
     // state the run inherited, not the warmup's own 32-thread burst
     val (load1Inherited, stealInherited) = loadEvidence()
-    headline.foreach { name =>
-      try runOne(spark, queries(name), "/root/testdata/sf0.001")
-      catch { case _: Throwable => }
-      finally graft.core.PipelineCaches.unpersistAll()
-    }
+    headline.foreach(warmUp(spark, _))
 
     def runList(load1Before: Double, stealBefore: Long): Attempt = {
       val results = headline.map { name =>
-        val t0 = System.nanoTime()
-        val ok = try { runOne(spark, queries(name), sfDir); true }
+        val dt = try { val (build, sink) = runQuery(spark, name, sfDir); build + sink }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop pipeline caches a query persisted before timing the next
-        // one — resident blocks from earlier queries otherwise squeeze
-        // executor memory and skew later numbers
-        graft.core.PipelineCaches.unpersistAll()
-        name -> (if (ok) dt else -1.0)
+        name -> dt
       }
       val (load1After, stealAfter) = loadEvidence()
       Attempt(results, load1Before, load1After, stealBefore, stealAfter)
@@ -395,7 +379,7 @@ object Bench {
     val retryEnabled =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY", "1") != "0"
     val firstContended =
-      contentionFlag(first.stealDelta, first.wall, cpus.toInt)
+      contentionFlag(first.stealDelta, first.wall, cpus)
     val attempts: Seq[Attempt] =
       if (firstContended && retryEnabled) {
         System.err.println(
@@ -407,7 +391,7 @@ object Bench {
     val chosen = attempts.minBy(_.stealDelta)
     val results = chosen.results
     val contended =
-      contentionFlag(chosen.stealDelta, chosen.wall, cpus.toInt)
+      contentionFlag(chosen.stealDelta, chosen.wall, cpus)
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
@@ -455,10 +439,27 @@ object Bench {
     }
   }
 
-  private def runOne(spark: SparkSession,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      dir: String): Unit =
-    fn(spark, dir).write.format("noop").mode("overwrite").save()
+  /** The one query run of Bench and `graft.tools.Profile`: build `name`
+    * on `dir`, write it to the noop sink (`beforeSink` runs untimed in
+    * between), drop the pipeline caches it persisted so they cannot
+    * squeeze later queries. Returns build and sink seconds. */
+  private[graft] def runQuery(spark: SparkSession, name: String, dir: String,
+      beforeSink: () => Unit = () => ()): (Double, Double) = {
+    val build = SparkEntry.queries(name)
+    try {
+      val t0 = System.nanoTime()
+      val df = build(spark, dir)
+      val t1 = System.nanoTime()
+      beforeSink()
+      val t2 = System.nanoTime()
+      graft.sources.NullSink.write(df)
+      ((t1 - t0) / 1e9, (System.nanoTime() - t2) / 1e9)
+    } finally graft.core.PipelineCaches.unpersistAll()
+  }
+
+  /** An untimed [[runQuery]] on the smallest SF: JIT and codegen warm-up. */
+  private[graft] def warmUp(spark: SparkSession, name: String): Unit =
+    try runQuery(spark, name, "/root/testdata/sf0.001") catch { case _: Throwable => }
 
   // Per-query seconds rounded to 3 decimals: round 6 lost its bench
   // artifact because the full-precision 59-query line outgrew the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,10 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for local
     // iteration (the driver always runs the full set)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     // A query that throws must be LOUD: round 4 shipped a 10-query
     // regression invisibly because failures produced only a stderr
@@ -59,11 +55,14 @@ object Verify {
     // Repo-root one-liner so the round's correctness signal survives
     // driver capture failures (round-6's CORRECTNESS json arrived empty
     // even though all queries passed): ran/failed counts + failure keys.
+    // A filtered run writes it into outDir, so local iteration leaves
+    // the committed full-run summary alone.
     val ran = SparkEntry.queries.count { case (name, _) => only.forall(_.contains(name)) }
-    try Files.writeString(Paths.get("VERIFY_SUMMARY.json"),
+    val summary = if (only.isDefined) s"$outDir/VERIFY_SUMMARY.json" else "VERIFY_SUMMARY.json"
+    try Files.writeString(Paths.get(summary),
       s"""{"ran":$ran,"failed":${failures.size},"failedQueries":[${failures.keys.map(q).mkString(",")}],"sfDir":${q(sfDir)},"outDir":${q(outDir)}}""" + "\n")
     catch { case e: Throwable =>
-      System.err.println(s"[verify] VERIFY_SUMMARY.json write failed: ${e.getMessage}")
+      System.err.println(s"[verify] $summary write failed: ${e.getMessage}")
     }
     spark.stop()
     if (failures.nonEmpty) {

@@ -25,6 +25,15 @@ object GraftSession {
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     configure(SparkSession.builder().master(s"local[$cores]"), cores).getOrCreate()
 
+  /** Cores of a command-line run (Bench, Verify, the tools). */
+  def mainCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+  /** The session of a command-line run, logging at WARN. */
+  def forMain(): SparkSession = {
+    val spark = local(mainCores)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // the engine's Catalyst surface: injected SQL functions

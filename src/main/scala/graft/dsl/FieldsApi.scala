@@ -86,7 +86,7 @@ object FieldsApi {
     def shuffleRows(seed: Long = 42L): DataFrame = df.orderBy(rand(seed))
 
     /** Materialization barrier (RichPipe.forceToDisk:428). */
-    def forceToDisk: DataFrame = df.persist()
+    def forceToDisk: DataFrame = graft.core.PipelineCaches.persistTracked(df)
 
     /** Wide → long (RichPipe.unpivot, RichPipe.scala:469). */
     def unpivotTo(ids: Seq[String], values: Seq[String],

@@ -95,11 +95,7 @@ object PlanLint {
   /** Sweep every registered gate query and print its findings. */
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.GraftSession.configure(
-      org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.forMain()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
       try {
         val fs = lint(fn(spark, dir))

@@ -106,7 +106,7 @@ final class TypedPipe[T](val ds: Dataset[T]) extends Serializable {
   /** Materialization barrier (reference `forceToDisk`,
     * TypedPipe.scala:148).
     */
-  def forceToDisk: TypedPipe[T] = new TypedPipe(ds.persist())
+  def forceToDisk: TypedPipe[T] = new TypedPipe(graft.core.PipelineCaches.persistTracked(ds))
 
   /** Group by a derived key (TypedPipe.scala:150-167). */
   def groupBy[K: Encoder](f: T => K)(implicit ev: Encoder[T]): Grouped[K, T] = {

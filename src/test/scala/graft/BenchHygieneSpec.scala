@@ -1,9 +1,9 @@
 package graft
 
 /** Bench-isolation invariant: after a headline query executes and
-  * [[graft.core.PipelineCaches.unpersistAll]] runs (exactly what
-  * Bench.scala does between timed queries), the query must leave NO
-  * NEW resident RDD blocks behind. A leftover cache squeezes executor
+  * [[graft.core.PipelineCaches.unpersistAll]] runs (Bench's own
+  * [[Bench.runQuery]]), the query must leave NO NEW resident RDD
+  * blocks behind. A leftover cache squeezes executor
   * memory for every subsequent query: a resident cache set once
   * inflated a mid-round bench measurement to 59 s (round 2), and the
   * round-5 `q_dedup_minhash` +50% drift raised the same suspicion
@@ -14,10 +14,10 @@ package graft
   *
   * The check is a per-query DELTA of `sc.getPersistentRDDs`, not
   * global emptiness: the suite shares one SparkSession with every
-  * other spec, and earlier suites legitimately leave session-lifetime
-  * residents (e.g. the untracked `persist` behind `forceToDisk`) that
-  * are not this spec's business. In Bench's own JVM the session starts
-  * clean, so delta-clean there IS globally clean.
+  * other spec, and earlier suites may leave session-lifetime residents
+  * (a spec's own `persist`) that are not this spec's business. In
+  * Bench's own JVM the session starts clean, so delta-clean there IS
+  * globally clean.
   */
 class BenchHygieneSpec extends SparkSpec {
 
@@ -54,9 +54,7 @@ class BenchHygieneSpec extends SparkSpec {
     val leaks = Bench.headline.filter(SparkEntry.queries.contains).flatMap {
       name =>
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        graft.core.PipelineCaches.unpersistAll()
+        Bench.runQuery(spark, name, dir)
         val after = spark.sparkContext.getPersistentRDDs
         val leaked = after.filterNot { case (id, _) => before.contains(id) }
         if (leaked.nonEmpty) {

@@ -12,9 +12,10 @@ import graft.core.PipelineCaches
 import graft.graph.Graphs
 
 /** The one lineage cut and the one loop driver: a cut keeps the
-  * source's statistics, every cut is freed by the pipeline cache drop,
-  * a loop holds one iterate and one round of RDD lineage whatever its
-  * round count, and no main source cuts lineage any other way.
+  * source's statistics, every cut and every `forceToDisk` barrier is
+  * freed by the pipeline cache drop, a loop holds one iterate and one
+  * round of RDD lineage whatever its round count, and no main source
+  * cuts lineage any other way.
   */
 class LineageSpec extends SparkSpec {
 
@@ -112,7 +113,12 @@ class LineageSpec extends SparkSpec {
         "sec", windows = Seq(2))),
       "bpe distributed" -> (() => graft.ml.Bpe.trainFromCounts(spark,
         graft.ml.Bpe.wordCounts(docs.select("text").as[String]), 5,
-        localVocabThreshold = 0L)))
+        localVocabThreshold = 0L)),
+      "FieldsApi.forceToDisk" -> (() => new graft.dsl.FieldsApi.RichDataFrame(
+        edges.filter(col("src") =!= 8L)).forceToDisk),
+      "TypedPipe.forceToDisk" -> (() => graft.typed.TypedPipe
+        .from(edges.as[(Long, Long)]).map { case (s, d) => (d, s) }
+        .forceToDisk.ds))
     PipelineCaches.unpersistAll()
     val leaks = kernels.flatMap { case (name, run) =>
       val before = persistentIds

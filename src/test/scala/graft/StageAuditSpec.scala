@@ -1,7 +1,7 @@
 package graft
 
 import graft.tools.StageAudit
-import graft.tools.StageAudit.StageStat
+import graft.core.QueryProfile.StageStat
 
 /** The one-task-collapse criterion on synthetic stage profiles: the
   * flag must fire on the round-18 edit-distance signature (one
@@ -9,8 +9,8 @@ import graft.tools.StageAudit.StageStat
   * and stay quiet on the benign small-SF shapes that a 32-core sf0.1
   * run produces constantly (low-split scans, AQE-coalesced tiny
   * shuffles, well-spread heavy stages). The live sweep itself runs
-  * per-round via `runMain graft.tools.StageAudit /root/testdata/sf0.1`
-  * — this spec pins the judgment, not the plumbing.
+  * per-round via `runMain graft.tools.Profile all <sf0.1 dir>`
+  * — this spec pins the judgment; ProfileSpec tests the plumbing.
   */
 class StageAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
 
