@@ -408,14 +408,14 @@ object Bench {
     // Durable fallback against driver tail-capture truncation: the FULL
     // per-query JSON lands at the repo root, so the round's bench signal
     // survives even if stdout capture clips (round-6 failure mode).
-    // ALSO write a cpus-stamped copy: the driver benches the same tree
-    // at two core counts and both runs previously wrote the same path,
-    // so the scaling run clobbered the main run's per-query capture
-    // (PERF_r11.per_query came out empty). The stamped file preserves
-    // each core count's capture; BENCH_SUMMARY.json stays the
-    // last-run fallback the driver already reads, now with a "cpus"
-    // key so a mismatched capture is detectable.
-    Seq("BENCH_SUMMARY.json", s"BENCH_SUMMARY_c$cpus.json").foreach { p =>
+    // Every run writes its cpus-stamped copy; only the run at the
+    // machine's own core count (the main run) writes the unstamped
+    // BENCH_SUMMARY.json, so a scaling run at another core count
+    // cannot overwrite the main run's capture.
+    val summaries = s"BENCH_SUMMARY_c$cpus.json" +:
+      (if (cpus == Runtime.getRuntime.availableProcessors) Seq("BENCH_SUMMARY.json")
+       else Nil)
+    summaries.foreach { p =>
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p), json + "\n")
       catch { case e: Throwable =>

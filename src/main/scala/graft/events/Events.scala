@@ -955,7 +955,7 @@ object Events {
     * distinct-VALUE cumulative count table, so equal values always
     * land in the same bucket (ntile splits ties across buckets by
     * arbitrary row order — non-reproducible across engines) and the
-    * window runs over distinct values, never a global row sort of
+    * prefix runs over distinct values, never a global row sort of
     * the user table (the [[graft.ml.Eval.rocAuc]] midrank shape).
     * Better dimensions sort DESC for recency (small = recent = high
     * cum_before share... handled by scoring −recency) and ASC for
@@ -963,19 +963,14 @@ object Events {
     *
     * Scale shape: one user hash aggregate collapses events to one
     * row per user; each dimension adds a distinct-value count
-    * aggregate + a bounded cumulative window + one value-keyed join
-    * back. The monetary dimension's distinct-value table is
-    * near-user-count-sized (sums are near-continuous even at cent
-    * grain) — `bigDomain = true` swaps each dimension's window for
-    * [[graft.functions.Ranks.distributedPrefixSums]]' two-pass
-    * prefix (identical integer cumulative counts, no window).
+    * aggregate + a [[graft.functions.Ranks]] prefix with its total +
+    * one value-keyed join back. The monetary dimension's
+    * distinct-value table is near-user-count-sized (sums are
+    * near-continuous even at cent grain).
     */
   def rfmSegments(events: DataFrame, userCol: String, secCol: String,
-      valueCol: String, asOfSec: Long, k: Int = 5,
-      bigDomain: Boolean = false): DataFrame = {
+      valueCol: String, asOfSec: Long, k: Int = 5): DataFrame = {
     require(k >= 2, "need at least 2 buckets")
-    val W = org.apache.spark.sql.expressions.Window
-    var big = bigDomain // || autoBig below, once usersPlan exists
     val usersPlan = events
       .select(col(userCol).as("user"), col(secCol).cast("long").as("sec"),
         col(valueCol).cast("double").as("v"))
@@ -987,13 +982,14 @@ object Events {
         // round kills the engine-dependent summation-order ulp noise
         // that would otherwise split "equal" spenders across buckets
         round(sum("v"), 2).as("monetary"))
-    // bigDomain's three eager pass-1 jobs (one per dimension) plus
-    // the final join would each recompute the events aggregate from
-    // scratch (no shared lazy plan for ReuseExchange to collapse) —
-    // persist the user spine once instead of scanning events 4x
-    big = bigDomain || graft.functions.Ranks.autoBig(usersPlan)
+    // above the window budget each dimension's two-pass prefix runs
+    // an eager job, and those three jobs plus the final join would
+    // each recompute the events aggregate from scratch (no shared
+    // lazy plan for ReuseExchange to collapse) — persist the user
+    // spine once instead of scanning events 4x
     val users =
-      if (big) graft.core.PipelineCaches.persistTracked(usersPlan)
+      if (graft.functions.Ranks.autoBig(usersPlan))
+        graft.core.PipelineCaches.persistTracked(usersPlan)
       else usersPlan
 
     // score(v): tie-coherent bucket 1 + floor(cum_before * k / N)
@@ -1001,20 +997,12 @@ object Events {
     def scored(dim: String, asc: Boolean): DataFrame = {
       val vals = users.groupBy(col(dim).as("v"))
         .agg(count(lit(1)).as("c"))
-      val w = W.orderBy(if (asc) col("v").asc else col("v").desc)
-        .rowsBetween(W.unboundedPreceding, -1)
-      val tot = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-      val cum =
-        if (big) graft.functions.Ranks.distributedPrefixSums(
-          vals, Seq(if (asc) col("v").asc else col("v").desc),
-          Seq(col("c") -> "cb"), inclusive = false,
-          totalsAs = Seq("n"))
-        else vals
-          .withColumn("cb", coalesce(sum("c").over(w), lit(0L)))
-          .withColumn("n", sum("c").over(tot))
-      cum.select(col("v").as(dim),
-        (lit(1) + floor(col("cb") * k / col("n"))).cast("int")
-          .as(s"${dim.charAt(0)}_score"))
+      graft.functions.Ranks.prefixSums(vals,
+          Seq(if (asc) col("v").asc else col("v").desc),
+          Seq(col("c") -> "cb"), inclusive = false, totalsAs = Seq("n"))
+        .select(col("v").as(dim),
+          (lit(1) + floor(col("cb") * k / col("n"))).cast("int")
+            .as(s"${dim.charAt(0)}_score"))
     }
     users
       .join(scored("recency", asc = false), Seq("recency"))
@@ -1561,7 +1549,8 @@ object Events {
     * Scale shape: one hash aggregate collapses the sweep to distinct
     * boundary seconds, then the running sum runs over that bounded
     * table (the time range in seconds, not the event count) — the
-    * rocAuc distinct-value kernel again.
+    * rocAuc distinct-value kernel again, through
+    * [[graft.functions.Ranks]].
     */
   def concurrency(events: DataFrame, startCol: String,
       endCol: String): DataFrame = {
@@ -1570,10 +1559,8 @@ object Events {
       .unionAll(events
         .select(col(endCol).cast("long").as("sec"), lit(-1L).as("d")))
       .groupBy("sec").agg(sum("d").as("delta"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("sec")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    deltas.select(col("sec"), col("delta"),
-      sum("delta").over(w).as("active"))
+    graft.functions.Ranks.prefixSums(deltas, Seq(col("sec")),
+      Seq(col("delta") -> "active"), inclusive = true)
   }
 
   /** Time-weighted average of a state-like value per key: each

@@ -102,21 +102,37 @@ object Joins {
     * pair of expressions when stats justify it — this operator is for
     * when the user knows the build side is selective and the stats
     * don't show it.
+    *
+    * `expectedItems` sizes the filter; the default (0) takes `right`'s
+    * plan estimate the way `InjectRuntimeFilter` sizes its own
+    * runtime filters: the row count, else the byte size over the
+    * estimated row width. `BloomFilterAggregate` clamps both to
+    * Spark's runtime-filter maxima.
     */
   def bloomJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-      how: String = "inner", expectedItems: Long = 4L * 1000 * 1000,
+      how: String = "inner", expectedItems: Long = 0L,
       fpp: Double = 0.01): DataFrame = {
     require(how == "inner" || how == "left_semi",
       s"bloomJoin is exact only for inner/left_semi (got $how)")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     import org.apache.spark.sql.graft.SketchColumns
+    val items = if (expectedItems > 0) expectedItems else estimatedRows(right)
     val ln2sq = math.log(2) * math.log(2)
-    val numBits = math.ceil(-expectedItems * math.log(fpp) / ln2sq).toLong
+    val numBits = math.ceil(-items * math.log(fpp) / ln2sq).toLong
     def keyHash: Column = xxhash64(keys.map(col): _*)
     val bf = right.agg(
-      SketchColumns.bloomFilterAgg(keyHash, expectedItems, numBits).as("bf"))
+      SketchColumns.bloomFilterAgg(keyHash, items, numBits).as("bf"))
     val pruned = left.filter(SketchColumns.bloomMightContain(bf.scalar(), keyHash))
     pruned.join(right, keys, how)
+  }
+
+  private def estimatedRows(df: DataFrame): Long = {
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    val plan = df.queryExecution.optimizedPlan
+    val stats = plan.stats
+    val rows = stats.rowCount.getOrElse(
+      stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    rows.max(1).min(Long.MaxValue).toLong
   }
 
   /** As-of join (superset — absent in the reference, which had only

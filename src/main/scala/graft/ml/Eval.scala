@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Ranks
+
 /** Model- and ranking-evaluation metrics over pipeline outputs: the
   * numbers a training-data team reads before trusting a quality
   * classifier (ROC AUC, average precision), a retrieval index
@@ -26,27 +28,18 @@ object Eval {
     * single-partition but over the SCORE VOCABULARY, not the corpus —
     * for calibrated model scores rounded to a few decimals that is
     * thousands of rows regardless of input size (the same
-    * vocab-window tradeoff [[TextAnalysis.zipfFit]] documents). For
-    * CONTINUOUS scores the distinct-score table approaches corpus
-    * size — set `bigDomain = true` to assign the prefix via
-    * [[graft.functions.Ranks.distributedPrefixSum]]'s two-pass order
-    * statistics instead (no window in the plan; identical integer
-    * prefixes).
+    * vocab-window tradeoff [[TextAnalysis.zipfFit]] documents);
+    * [[graft.functions.Ranks]] picks the two-pass prefix instead when
+    * the table outgrows one task (continuous scores).
     */
-  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String,
-      bigDomain: Boolean = false): DataFrame = {
+  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val lab = col(labelCol).cast("int")
     val byScore = df.select(col(scoreCol).as("s"), lab.as("y"))
       .groupBy("s").agg(count(lit(1)).as("n"), sum("y").as("p"))
     // midrank of a tie block starting after `before` rows with n
     // members = before + (n+1)/2; U = sum of positive midranks
-    val withBefore =
-      if (bigDomain || graft.functions.Ranks.autoBig(byScore))
-        graft.functions.Ranks.distributedPrefixSum(
-          byScore, Seq(col("s")), col("n"), "b", inclusive = false)
-      else byScore.withColumn("b",
-        coalesce(sum("n").over(Window.orderBy("s")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val withBefore = Ranks.prefixSums(byScore, Seq(col("s")),
+      Seq(col("n") -> "b"), inclusive = false)
     withBefore
       .withColumn("midrank", col("b") + (col("n") + 1) / 2.0)
       .agg(sum("p").as("n_pos"), (sum("n") - sum("p")).as("n_neg"),
@@ -64,25 +57,16 @@ object Eval {
     * Σ P(k)·Δrel(k) / n_pos when scores are distinct. Returns one row
     * (n_pos, ap); NULL ap when there are no positives.
     *
-    * Same scale shape as [[rocAuc]]: the window runs over distinct
-    * scores only — and the same `bigDomain` escape hatch computes
-    * both cumulative sums via the two-pass prefix for continuous
-    * scores.
+    * Same scale shape as [[rocAuc]]: both cumulative sums run over
+    * distinct scores only, in one [[graft.functions.Ranks]] prefix.
     */
   def averagePrecision(df: DataFrame, scoreCol: String,
-      labelCol: String, bigDomain: Boolean = false): DataFrame = {
+      labelCol: String): DataFrame = {
     val lab = col(labelCol).cast("int")
     val byScore = df.select(col(scoreCol).as("s"), lab.as("y"))
       .groupBy("s").agg(count(lit(1)).as("n"), sum("y").as("p"))
-    val w = Window.orderBy(col("s").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    (if (bigDomain || graft.functions.Ranks.autoBig(byScore))
-       graft.functions.Ranks.distributedPrefixSums(
-        byScore, Seq(col("s").desc),
+    Ranks.prefixSums(byScore, Seq(col("s").desc),
         Seq(col("n") -> "cum_n", col("p") -> "cum_p"), inclusive = true)
-     else byScore
-      .withColumn("cum_n", sum("n").over(w))
-      .withColumn("cum_p", sum("p").over(w)))
       .agg(sum("p").as("n_pos"),
         sum(col("p") * col("cum_p") / col("cum_n")).as("wsum"))
       .select(col("n_pos"),
@@ -306,21 +290,15 @@ object Eval {
     * when σ = 0 (all values tied).
     *
     * Same scale shape as [[rocAuc]] — the tie-block sizes fall out of
-    * the same distinct-score table the midranks use; `bigDomain`
-    * swaps the window for the same two-pass prefix.
+    * the same distinct-score table the midranks use.
     */
   def mannWhitney(df: DataFrame, valueCol: String,
-      labelCol: String, bigDomain: Boolean = false): DataFrame = {
+      labelCol: String): DataFrame = {
     val lab = col(labelCol).cast("int")
     val byScore = df.select(col(valueCol).as("s"), lab.as("y"))
       .groupBy("s").agg(count(lit(1)).as("n"), sum("y").as("p"))
-    val withBefore =
-      if (bigDomain || graft.functions.Ranks.autoBig(byScore))
-        graft.functions.Ranks.distributedPrefixSum(
-          byScore, Seq(col("s")), col("n"), "b", inclusive = false)
-      else byScore.withColumn("b",
-        coalesce(sum("n").over(Window.orderBy("s")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val withBefore = Ranks.prefixSums(byScore, Seq(col("s")),
+      Seq(col("n") -> "b"), inclusive = false)
     withBefore
       .withColumn("midrank", col("b") + (col("n") + 1) / 2.0)
       .agg(sum("p").as("n1"), (sum("n") - sum("p")).as("n2"),
@@ -1021,16 +999,16 @@ object Eval {
     *
     * Scale shape: the [[rocAuc]]/[[mannWhitney]] discipline — one
     * hash aggregate to the DISTINCT-value table, one vocab-sized
-    * midrank window, one (group) aggregate. The corpus is never
+    * [[graft.functions.Ranks]] midrank prefix, one (group) aggregate. The corpus is never
     * sorted or windowed row-wise.
     */
   def kruskalWallis(df: DataFrame, valueCol: String,
       groupCol: String): DataFrame = {
     val byVal = df.select(col(valueCol).as("s"), col(groupCol).as("g"))
       .groupBy("s").agg(count(lit(1)).as("n"))
-    val before = coalesce(sum("n").over(Window.orderBy("s")
-      .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-    val ranks = byVal.withColumn("midrank", before + (col("n") + 1) / 2.0)
+    val ranks = Ranks.prefixSums(byVal, Seq(col("s")),
+        Seq(col("n") -> "b"), inclusive = false)
+      .withColumn("midrank", col("b") + (col("n") + 1) / 2.0)
     val perGv = df.select(col(valueCol).as("s"), col(groupCol).as("g"))
       .groupBy("g", "s").agg(count(lit(1)).as("gn"))
     val perG = perGv.join(ranks.select("s", "midrank"), "s")
@@ -1102,31 +1080,18 @@ object Eval {
     * risk) with `aurc` repeated on every row.
     *
     * Scale shape: one hash aggregate to the DISTINCT-confidence
-    * table, two cumulative windows over that vocab table, one
-    * broadcast total. `bigDomain` computes both cumulative sums in
-    * ONE two-pass sorted prefix ([[graft.functions.Ranks
-    * .distributedPrefixSums]]) for continuous confidences whose
-    * distinct table approaches corpus size.
+    * table, both cumulative sums over that vocab table in one
+    * [[graft.functions.Ranks]] prefix, one broadcast total.
     */
   def riskCoverage(df: DataFrame, confCol: String,
-      correctCol: String, bigDomain: Boolean = false): DataFrame = {
+      correctCol: String): DataFrame = {
     val byConf = df.select(col(confCol).as("confidence"),
         col(correctCol).cast("boolean").as("ok"))
       .groupBy("confidence")
       .agg(count(lit(1)).as("n"),
         sum(when(!col("ok"), 1L).otherwise(0L)).as("err"))
-    val w = Window.orderBy(col("confidence").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // bigDomain: both cumulative sums in ONE two-pass sorted prefix
-    // (continuous confidences make the distinct table corpus-sized)
-    val curve =
-      if (bigDomain || graft.functions.Ranks.autoBig(byConf))
-        graft.functions.Ranks.distributedPrefixSums(
-        byConf, Seq(col("confidence").desc),
-        Seq(col("n") -> "cn", col("err") -> "cerr"), inclusive = true)
-      else byConf
-        .withColumn("cn", sum("n").over(w))
-        .withColumn("cerr", sum("err").over(w))
+    val curve = Ranks.prefixSums(byConf, Seq(col("confidence").desc),
+      Seq(col("n") -> "cn", col("err") -> "cerr"), inclusive = true)
     val tot = curve.agg(max("cn").as("nt"),
       sum(col("n").cast("double") * col("cerr") / col("cn")).as("wr"))
     curve.crossJoin(broadcast(tot))
@@ -1145,35 +1110,20 @@ object Eval {
     * cum_gain = cumulative positive share, lift = bucket rate over
     * base rate); lift is NULL when the corpus has no positives.
     *
-    * Scale shape: one hash aggregate to the distinct-score table,
-    * cumulative windows over that table, one bucket aggregate.
-    * `bigDomain` swaps the whole-table windows for the two-pass
-    * prefix + pass-1 grand totals (continuous scores).
+    * Scale shape: one hash aggregate to the distinct-score table, one
+    * [[graft.functions.Ranks]] prefix with grand totals over that
+    * table, one bucket aggregate.
     */
   def gainsTable(df: DataFrame, scoreCol: String, labelCol: String,
-      k: Int = 10, bigDomain: Boolean = false): DataFrame = {
+      k: Int = 10): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val byScore = df.select(col(scoreCol).as("s"),
         col(labelCol).cast("int").as("y"))
       .groupBy("s").agg(count(lit(1)).as("n"), sum("y").as("p"))
-    val w = Window.orderBy(col("s").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // bigDomain: the exclusive prefix comes from the two-pass order
-    // statistics and the grand totals from a 1-row broadcast instead
-    // of whole-table windows (continuous scores make the distinct
-    // table corpus-sized)
-    val bucketed = (
-      if (bigDomain || graft.functions.Ranks.autoBig(byScore))
-        graft.functions.Ranks.distributedPrefixSums(byScore,
-          Seq(col("s").desc),
-          Seq(col("n") -> "before", col("p") -> "__gains_pp"),
-          inclusive = false, totalsAs = Seq("nt", "pt"))
-          .drop("__gains_pp")
-      else byScore
-        .withColumn("before", coalesce(sum("n").over(w), lit(0L)))
-        .withColumn("nt", sum("n").over(Window.partitionBy()))
-        .withColumn("pt", sum("p").over(Window.partitionBy()))
-    )
+    val bucketed = Ranks.prefixSums(byScore, Seq(col("s").desc),
+        Seq(col("n") -> "before", col("p") -> "__gains_pp"),
+        inclusive = false, totalsAs = Seq("nt", "pt"))
+      .drop("__gains_pp")
       .withColumn("bucket",
         (lit(1) + floor(col("before") * k / col("nt"))).cast("long"))
     val perBucket = bucketed.groupBy("bucket")
@@ -1261,14 +1211,11 @@ object Eval {
     * controls yet.
     *
     * Scale shape: one (score) hash aggregate with per-arm counters,
-    * cumulative windows over the distinct-score table, one bucket
-    * aggregate. `bigDomain` swaps the distinct-score windows for the
-    * two-pass prefix + pass-1 total (continuous scores); the k-row
-    * bucket windows stay.
+    * one [[graft.functions.Ranks]] prefix with its total over the
+    * distinct-score table, one bucket aggregate, k-row bucket windows.
     */
   def qiniCurve(df: DataFrame, scoreCol: String, treatedCol: String,
-      outcomeCol: String, k: Int = 10,
-      bigDomain: Boolean = false): DataFrame = {
+      outcomeCol: String, k: Int = 10): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val t = col(treatedCol).cast("boolean")
     val y = col(outcomeCol).cast("int")
@@ -1278,19 +1225,8 @@ object Eval {
         sum(when(col("t"), 1L).otherwise(0L)).as("nt"),
         sum(when(col("t"), col("y")).otherwise(0)).as("ct"),
         sum(when(!col("t"), col("y")).otherwise(0)).as("cc"))
-    val w = Window.orderBy(col("s").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // bigDomain: two-pass prefix + 1-row total broadcast (see
-    // gainsTable — same continuous-score rationale)
-    val bucketed = (
-      if (bigDomain || graft.functions.Ranks.autoBig(byScore))
-        graft.functions.Ranks.distributedPrefixSums(byScore,
-          Seq(col("s").desc), Seq(col("n") -> "before"),
-          inclusive = false, totalsAs = Seq("tot"))
-      else byScore
-        .withColumn("before", coalesce(sum("n").over(w), lit(0L)))
-        .withColumn("tot", sum("n").over(Window.partitionBy()))
-    )
+    val bucketed = Ranks.prefixSums(byScore, Seq(col("s").desc),
+        Seq(col("n") -> "before"), inclusive = false, totalsAs = Seq("tot"))
       .withColumn("bucket",
         (lit(1) + floor(col("before") * k / col("tot"))).cast("long"))
     val perBucket = bucketed.groupBy("bucket")

@@ -484,26 +484,16 @@ object Profile {
     * (n+1)/n. Returns one row (n, total, gini); NULL gini when the
     * total is 0.
     *
-    * Scale shape: the ranking window runs over the DISTINCT-value
-    * table (the [[graft.ml.Eval.rocAuc]] kernel — for counts/prices
-    * that is bounded; quantize first for truly continuous values),
+    * Scale shape: the [[graft.functions.Ranks]] prefix runs over the
+    * DISTINCT-value table (the [[graft.ml.Eval.rocAuc]] kernel),
     * never over the rows.
     */
   def giniConcentration(df: DataFrame, valCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
     val v = col(valCol).cast("double")
     val byV = df.select(v.as("v")).filter(col("v") >= 0)
       .groupBy("v").agg(count(lit(1)).as("c"))
-    // size-adaptive (r12): two-pass exact prefix above the single-
-    // task sort budget, window below — same integer prefixes
-    val cum =
-      if (graft.functions.Ranks.autoBig(byV))
-        graft.functions.Ranks.distributedPrefixSum(
-          byV, Seq(col("v")), col("c"), "__before", inclusive = false)
-      else byV.withColumn("__before",
-        coalesce(sum("c").over(W.orderBy("v")
-          .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-    cum
+    graft.functions.Ranks.prefixSums(byV, Seq(col("v")),
+        Seq(col("c") -> "__before"), inclusive = false)
       .withColumn("ranksum",
         col("v") * (col("c") * col("__before") +
           col("c") * (col("c") + 1) / 2.0))
@@ -603,25 +593,18 @@ object Profile {
     * constant.
     *
     * Scale shape: each column collapses to its DISTINCT values first
-    * (hash aggregate), midranks come from a running-sum window over
-    * that value table (vocabulary-sized, the [[graft.ml.Eval.rocAuc]]
-    * tradeoff), and the ranks join back value-keyed — the corpus
+    * (hash aggregate), midranks come from a [[graft.functions.Ranks]]
+    * prefix over that value table (the [[graft.ml.Eval.rocAuc]]
+    * kernel), and the ranks join back value-keyed — the corpus
     * itself is never globally sorted.
     */
   def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
     def midranks(c: String) = {
       val byV = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("n"))
-      // size-adaptive (r12): same integer prefixes either way
-      val cum =
-        if (graft.functions.Ranks.autoBig(byV))
-          graft.functions.Ranks.distributedPrefixSum(
-            byV, Seq(col("v")), col("n"), "__b", inclusive = false)
-        else byV.withColumn("__b",
-          coalesce(sum("n").over(W.orderBy("v")
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      cum.select(col("v"),
-        (col("__b") + (col("n") + 1) / 2.0).as(s"__r_$c"))
+      graft.functions.Ranks.prefixSums(byV, Seq(col("v")),
+          Seq(col("n") -> "__b"), inclusive = false)
+        .select(col("v"),
+          (col("__b") + (col("n") + 1) / 2.0).as(s"__r_$c"))
     }
     df.select(col(xCol), col(yCol))
       .join(midranks(xCol).withColumnRenamed("v", xCol), xCol)
@@ -703,18 +686,14 @@ object Profile {
     * Returns the rows + (stratum_rank, pooled_pos, normalized).
     *
     * Scale shape: per-stratum rank windows (partitioned), ONE
-    * distinct-VALUE cumulative window on the pooled side (the
+    * distinct-VALUE cumulative sum on the pooled side (the
     * midrank discipline — never a global row sort of the corpus),
     * and a cum-range join (cb < pos ≤ cb + c) that is an
     * interval-bucketed lookup, not all-pairs. The pooled cumulative
-    * window runs on one task sized by |distinct values| — fine for
-    * scores; set `bigVocab = true` when values are high-cardinality
-    * (open-ended ids, raw floats at corpus scale) to compute the same
-    * prefix sums via [[graft.functions.Ranks.distributedPrefixSum]]'s
-    * two-pass range-partitioned shape instead.
+    * sum is a [[graft.functions.Ranks]] prefix.
     */
   def quantileNormalize(df: DataFrame, idCol: String, strataCol: String,
-      valueCol: String, bigVocab: Boolean = false): DataFrame = {
+      valueCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(idCol).as("id"), col(strataCol).as("stratum"),
       col(valueCol).cast("double").as("v"))
@@ -725,12 +704,8 @@ object Profile {
       .withColumn("ng", count(lit(1)).over(W.partitionBy("stratum")))
     val pooledCounts = base.groupBy(col("v").as("pv"))
       .agg(count(lit(1)).as("c"))
-    val pooledVals =
-      if (bigVocab || graft.functions.Ranks.autoBig(pooledCounts))
-        graft.functions.Ranks.distributedPrefixSum(
-        pooledCounts, Seq(col("pv")), col("c"), "cb", inclusive = false)
-      else pooledCounts.withColumn("cb", coalesce(sum("c").over(
-        W.orderBy("pv").rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+    val pooledVals = graft.functions.Ranks.prefixSums(pooledCounts,
+      Seq(col("pv")), Seq(col("c") -> "cb"), inclusive = false)
     val n = base.groupBy().agg(count(lit(1)).as("n_total"))
     // position→value lookup as a BUCKETED interval join (the
     // q_join_interval shape): a pooled value covers positions

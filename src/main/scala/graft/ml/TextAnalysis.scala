@@ -931,30 +931,19 @@ object TextAnalysis {
     * ln(predicted freq at rank 1), `r2` the fit quality in log-log
     * space (NULL for single-type corpora, where variance is zero).
     *
-    * Scale shape: one token scan → vocabulary hash count; by default
-    * the rank window sorts the VOCABULARY on one task (bounded by
-    * |V|, not the corpus — the same single-partition-over-vocab
-    * tradeoff [[heavyHitters]] documents — fine for word vocabs);
-    * set `bigVocab = true` for open vocabularies (n-grams, URLs) to
-    * rank via [[graft.functions.Ranks.distributedRank]]'s two-pass
-    * range-partitioned shape instead — identical ranks (the order is
-    * total), no single-partition window. The regression itself is one
-    * 6-number aggregate of (x, y, xy, x², y²) partials — nothing is
-    * collected.
+    * Scale shape: one token scan → vocabulary hash count, ranked by
+    * [[graft.functions.Ranks.rank]] (one window task for a word
+    * vocabulary, the two-pass rank for open ones — n-grams, URLs).
+    * The regression itself is one 6-number aggregate of
+    * (x, y, xy, x², y²) partials — nothing is collected.
     */
-  def zipfFit(df: DataFrame, textCol: String,
-      bigVocab: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def zipfFit(df: DataFrame, textCol: String): DataFrame = {
     val counts = df.select(
         explode(split(normalize(col(textCol)), " ")).as("tk"))
       .filter(length(col("tk")) > 0)
       .groupBy("tk").agg(count(lit(1)).as("c"))
-    val ranked =
-      if (bigVocab || graft.functions.Ranks.autoBig(counts))
-        graft.functions.Ranks.distributedRank(counts,
-          Seq(col("c").desc, col("tk")), "rank")
-      else counts.withColumn("rank",
-        row_number().over(Window.orderBy(col("c").desc, col("tk"))))
+    val ranked = graft.functions.Ranks.rank(counts,
+      Seq(col("c").desc, col("tk")), "rank")
     val x = log(col("rank").cast("double"))
     val y = log(col("c").cast("double"))
     ranked
@@ -1053,23 +1042,16 @@ object TextAnalysis {
     * join runs on it.
     */
   def burrowsDelta(df: DataFrame, strataCol: String, textCol: String,
-      topM: Int = 50, bigVocab: Boolean = false): DataFrame = {
+      topM: Int = 50): DataFrame = {
     require(topM >= 1)
-    import org.apache.spark.sql.expressions.Window
     val tok = df.select(col(strataCol).cast("string").as("s"),
       explode(filter(split(normalize(col(textCol)), " "),
         t => length(t) > 0)).as("tk"))
     val sw = tok.groupBy("s", "tk").agg(count(lit(1)).as("c"))
     val stot = sw.groupBy("s").agg(sum("c").as("tot"))
     val gc = sw.groupBy("tk").agg(sum("c").as("g"))
-    // default: top-M rank over the distinct-WORD aggregate on one
-    // task (|V|-bounded); bigVocab: the two-pass distributed rank —
-    // same total order, no single-partition window
-    val top = (if (bigVocab || graft.functions.Ranks.autoBig(gc))
-        graft.functions.Ranks.distributedRank(gc,
-          Seq(col("g").desc, col("tk")), "r")
-      else gc.withColumn("r",
-        row_number().over(Window.orderBy(col("g").desc, col("tk")))))
+    val top = graft.functions.Ranks.rank(gc,
+        Seq(col("g").desc, col("tk")), "r")
       .filter(col("r") <= topM).select("tk")
     val grid = broadcast(top).crossJoin(broadcast(stot))
       .join(sw, Seq("s", "tk"), "left")

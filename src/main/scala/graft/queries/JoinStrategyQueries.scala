@@ -58,7 +58,7 @@ object JoinStrategyQueries extends QueryGroup {
       val hi = t(s, dir, "orders")
         .filter(col("o_totalprice") > 400000)
         .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-      Joins.bloomJoin(li, hi, Seq("l_orderkey"), expectedItems = 1000000L)
+      Joins.bloomJoin(li, hi, Seq("l_orderkey"))
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice") * col("o_totalprice") / 1000000.0), 2).as("xprod"))

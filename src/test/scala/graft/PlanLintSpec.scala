@@ -355,21 +355,25 @@ class PlanLintSpec extends SparkSpec {
           s"distinct-score window survived: $windows")
       else assert(windows.isEmpty, s"unexpected windows: $windows")
     }
-    windowless(Eval.rocAuc(scored, "score", "label", bigDomain = true))
-    windowless(Eval.mannWhitney(scored, "score", "label",
-      bigDomain = true))
-    windowless(Eval.averagePrecision(scored, "score", "label",
-      bigDomain = true))
-    windowless(Eval.riskCoverage(scored, "score", "label",
-      bigDomain = true))
-    windowless(Eval.gainsTable(scored, "score", "label",
-      bigDomain = true), allowBounded = true)
-    windowless(Eval.qiniCurve(scored, "score", "treated", "label",
-      bigDomain = true), allowBounded = true)
+    def twoPass[T](body: => T): T =
+      graft.functions.Ranks.withWindowMaxBytes(0L)(body)
+    windowless(twoPass(Eval.rocAuc(scored, "score", "label")))
+    windowless(twoPass(Eval.mannWhitney(scored, "score", "label")))
+    windowless(twoPass(Eval.averagePrecision(scored, "score", "label")))
+    windowless(twoPass(Eval.riskCoverage(scored, "score", "label")))
+    windowless(twoPass(Eval.gainsTable(scored, "score", "label")),
+      allowBounded = true)
+    windowless(twoPass(Eval.qiniCurve(scored, "score", "treated",
+      "label")), allowBounded = true)
     val ev = spark.range(0, 5000).select(
       (col("id") % 400).as("u"), col("id").as("sec"),
       ((col("id") * 37) % 101).cast("double").as("v"))
-    windowless(graft.events.Events.rfmSegments(ev, "u", "sec", "v",
-      asOfSec = 10000L, k = 5, bigDomain = true))
+    windowless(twoPass(graft.events.Events.rfmSegments(ev, "u", "sec", "v",
+      asOfSec = 10000L, k = 5)))
+    // the two distinct-value kernels without a size gate of their own
+    windowless(twoPass(Eval.kruskalWallis(scored, "score", "treated")))
+    windowless(twoPass(graft.events.Events.concurrency(
+      ev.select(col("sec").as("s"), (col("sec") + col("u")).as("e")),
+      "s", "e")))
   }
 }

@@ -430,6 +430,12 @@ class ScaleInvariantsSpec extends SparkSpec {
     }))
   }
 
+  /** Builds `body` with the window budget at zero: every
+    * [[graft.functions.Ranks]] decision inside takes the two-pass path.
+    */
+  private def twoPass[T](body: => T): T =
+    graft.functions.Ranks.withWindowMaxBytes(0L)(body)
+
   test("bigVocab distributed-rank path equals the window path at sf0.1 " +
       "(zipfFit, burrowsDelta, quantileNormalize)") {
     import graft.ml.{Profile, TextAnalysis => TA}
@@ -453,7 +459,7 @@ class ScaleInvariantsSpec extends SparkSpec {
     def row1(df: org.apache.spark.sql.DataFrame): Seq[Any] =
       df.collect().map(_.toSeq).toSeq.flatten
     val (z1, z2) = (row1(TA.zipfFit(docs, "text")),
-      row1(TA.zipfFit(docs, "text", bigVocab = true)))
+      row1(twoPass(TA.zipfFit(docs, "text"))))
     assert(z1.length == z2.length &&
       z1.lazyZip(z2).forall(close), s"$z1 vs $z2")
 
@@ -462,7 +468,7 @@ class ScaleInvariantsSpec extends SparkSpec {
       df.collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getDouble(2)).toMap
     val (d1, d2) = (deltaMap(TA.burrowsDelta(docs, "source", "text")),
-      deltaMap(TA.burrowsDelta(docs, "source", "text", bigVocab = true)))
+      deltaMap(twoPass(TA.burrowsDelta(docs, "source", "text"))))
     assert(d1.keySet == d2.keySet &&
       d1.forall { case (k, v) => close(v, d2(k)) }, s"$d1 vs $d2")
 
@@ -482,8 +488,8 @@ class ScaleInvariantsSpec extends SparkSpec {
       (col("doc_id") % 1000).cast("double").as("score"))
     assert(checksum(Profile.quantileNormalize(q, "doc_id", "source",
         "score")) ==
-      checksum(Profile.quantileNormalize(q, "doc_id", "source",
-        "score", bigVocab = true)))
+      checksum(twoPass(Profile.quantileNormalize(q, "doc_id", "source",
+        "score"))))
   }
 
   test("bigDomain prefix path equals the window path at sf0.1 on " +
@@ -516,24 +522,23 @@ class ScaleInvariantsSpec extends SparkSpec {
         s"$x vs $y")
     }
     eq1(Eval.rocAuc(scored, "score", "label"),
-      Eval.rocAuc(scored, "score", "label", bigDomain = true))
+      twoPass(Eval.rocAuc(scored, "score", "label")))
     eq1(Eval.mannWhitney(scored, "score", "label"),
-      Eval.mannWhitney(scored, "score", "label", bigDomain = true))
+      twoPass(Eval.mannWhitney(scored, "score", "label")))
     eq1(Eval.averagePrecision(scored, "score", "label"),
-      Eval.averagePrecision(scored, "score", "label", bigDomain = true))
+      twoPass(Eval.averagePrecision(scored, "score", "label")))
     // gains/qini collapse to k buckets — integer columns exact, the
     // ratio columns derive from exact integers
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("bucket").collect().map(_.toSeq).toSeq
     val (g1, g2) = (sortedRows(Eval.gainsTable(scored, "score", "label")),
-      sortedRows(Eval.gainsTable(scored, "score", "label",
-        bigDomain = true)))
+      sortedRows(twoPass(Eval.gainsTable(scored, "score", "label"))))
     assert(g1.length == g2.length && g1.lazyZip(g2).forall(
       (r1, r2) => r1.lazyZip(r2).forall(close)), s"$g1 vs $g2")
     val (u1, u2) = (sortedRows(
         Eval.qiniCurve(scored, "score", "treated", "label")),
-      sortedRows(Eval.qiniCurve(scored, "score", "treated", "label",
-        bigDomain = true)))
+      sortedRows(twoPass(
+        Eval.qiniCurve(scored, "score", "treated", "label"))))
     assert(u1.length == u2.length && u1.lazyZip(u2).forall(
       (r1, r2) => r1.lazyZip(r2).forall(close)), s"$u1 vs $u2")
     // rfmSegments: per-user frame with three near-continuous bucket
@@ -542,9 +547,10 @@ class ScaleInvariantsSpec extends SparkSpec {
     val evd = spark.read.parquet(s"$dir/events.parquet")
     val rfmIn = evd.select(col("user_id"),
       graft.core.Ts.seconds(evd).as("sec"), col("value"))
-    def rfmSum(bigDomain: Boolean): Seq[Any] = {
-      val r = graft.events.Events.rfmSegments(rfmIn, "user_id", "sec",
-        "value", asOfSec = 1706659200L, k = 5, bigDomain = bigDomain)
+    def rfmSum(forceTwoPass: Boolean): Seq[Any] = {
+      def build = graft.events.Events.rfmSegments(rfmIn, "user_id", "sec",
+        "value", asOfSec = 1706659200L, k = 5)
+      val r = if (forceTwoPass) twoPass(build) else build
       r.agg(count(lit(1)), sum(xxhash64(col("user"), col("recency"),
         col("frequency"), col("monetary"), col("rfm")))).collect()
         .head.toSeq
@@ -559,7 +565,6 @@ class ScaleInvariantsSpec extends SparkSpec {
         col("coverage"), col("risk"),
         floor(col("aurc") * 1e4 + 0.5)))).collect().head.toSeq
     assert(rcSum(Eval.riskCoverage(scored, "score", "label")) ==
-      rcSum(Eval.riskCoverage(scored, "score", "label",
-        bigDomain = true)))
+      rcSum(twoPass(Eval.riskCoverage(scored, "score", "label"))))
   }
 }
