@@ -999,8 +999,8 @@ object Eval {
     *
     * Scale shape: the [[rocAuc]]/[[mannWhitney]] discipline — one
     * hash aggregate to the DISTINCT-value table, one vocab-sized
-    * [[graft.functions.Ranks]] midrank prefix, one (group) aggregate. The corpus is never
-    * sorted or windowed row-wise.
+    * [[graft.functions.Ranks]] midrank prefix, one (group) aggregate.
+    * The corpus is never sorted or windowed row-wise.
     */
   def kruskalWallis(df: DataFrame, valueCol: String,
       groupCol: String): DataFrame = {

@@ -126,6 +126,7 @@ class RanksSpec extends SparkSpec {
       Seq(col("n") -> "before", col("m") -> "mb"), inclusive = false,
       totalsAs = Seq("nt", "mt")))
   }
+
   test("no main source decides the global order outside Ranks") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
